@@ -6,7 +6,7 @@ read-only at /root/reference), re-expressed Spark-first:
 
 - DataFrame/SQL logical plans; Catalyst/Tungsten pick physical strategy.
 - Structured Streaming for the streaming surface (update-mode counts,
-  watermarked windows, interval joins, transformWithStateInPandas).
+  watermarked windows, interval joins, applyInPandasWithState).
 - Every operator has a *batch mode* (same expressions over bounded data),
   which is the oracle-checkable surface and the 100 TB backfill path.
 

@@ -40,9 +40,10 @@ REPLAY_CHUNKS = 2
 # count is sized to STATE VOLUME (~10-100 MB per shard is the sweet spot),
 # not to cores: the fixture state at sf<=0.1 is tens of MB, so 8 shards —
 # measured 1.7x faster than the 32-shard default on the interval join with
-# identical results. A 100 TB deployment raises spark.sql.shuffle.partitions
-# (or pins ksl.state.partitions) at session build; that always wins
-# (streaming/runner._ensure_state_parallelism).
+# identical results. Passed as `state_partitions`, it overrides the
+# session's spark.sql.shuffle.partitions for the run; only a
+# ksl.state.partitions pin beats it, so a 100 TB deployment sets that
+# (streaming/runner._state_partitions).
 STATE_SHARDS = 8
 ALERT_VALUE_THRESHOLD = 100.0  # events.value gate for s03 (~20% qualify)
 ALERT_AFTER = 3
@@ -376,7 +377,6 @@ def _s06(spark: SparkSession, sf: str) -> DataFrame:
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
     runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
                          arrow_batch_rows=500_000)
     return spark.table(name)
 
@@ -537,7 +537,6 @@ def _s09(spark: SparkSession, sf: str) -> DataFrame:
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
     runner.run_to_memory(enriched, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
                          arrow_batch_rows=500_000)
     return spark.table(name)
 
@@ -733,7 +732,6 @@ def _s12(spark: SparkSession, sf: str) -> DataFrame:
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
     runner.run_to_memory(enriched, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
                          arrow_batch_rows=500_000)
     return spark.table(name)
 
@@ -1088,7 +1086,6 @@ def _s20(spark: SparkSession, sf: str) -> DataFrame:
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
     runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS,
-                         shard_count=stateful.REORDER_SHARDS,
                          arrow_batch_rows=500_000)
     return spark.table(name)
 

@@ -10,7 +10,7 @@ Batch/exact form: a running count window function over qualifying records,
 filtered to running > alert_after. Deterministic ordering requires a
 tiebreaker column (the reference's ordering is arrival order; batch pins it
 to (ts, unique id)). The streaming per-record-emission form lives in
-`streaming/stateful.py` (transformWithStateInPandas).
+`streaming/stateful.py` (applyInPandasWithState).
 
 Window function note for scale: the partition key is the customer, so state
 per task is one partition's customers — no global sort, one shuffle.

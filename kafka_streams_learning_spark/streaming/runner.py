@@ -16,6 +16,7 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 _SPARK_DEFAULT_SHUFFLE_PARTITIONS = "200"
 
@@ -54,17 +55,19 @@ def _checkpoint() -> str:
     return run_staging_dir("ckpt")
 
 
-def _ensure_state_parallelism(
+def _state_partitions(
     spark: SparkSession, state_partitions: int | None = None
-) -> None:
-    """Size stateful-stream parallelism to the cluster, not Spark's static
-    default. `spark.sql.shuffle.partitions` fixes the state-store partition
-    count at first checkpoint, and AQE does NOT coalesce stateful streaming
-    shuffles — a vanilla session's 200 partitions means 200 state stores
-    per operator (measured 3-4x slower micro-batches on local[32] at
-    sf0.01). Only overrides the untouched default, so a deliberately tuned
-    session is left alone; on a real cluster defaultParallelism is the
-    executor-core count, which is the right state shard count.
+) -> str | None:
+    """The `spark.sql.shuffle.partitions` a stateful run should start
+    with, or None to keep the session's. Sizes stateful-stream
+    parallelism to the cluster, not Spark's static default: the setting
+    fixes the state-store partition count at first checkpoint, and AQE
+    does NOT coalesce stateful streaming shuffles — a vanilla session's
+    200 partitions means 200 state stores per operator (measured 3-4x
+    slower micro-batches on local[32] at sf0.01). Only the untouched
+    default is overridden, so a deliberately tuned session is left alone;
+    on a real cluster defaultParallelism is the executor-core count,
+    which is the right state shard count.
 
     A session that was EXPLICITLY configured (builder/spark-submit conf)
     is never overridden, even to exactly 200 — that intent is visible in
@@ -86,13 +89,11 @@ def _ensure_state_parallelism(
     key = "spark.sql.shuffle.partitions"
     pinned = spark.conf.get("ksl.state.partitions", None)
     if pinned is not None:
-        spark.conf.set(key, pinned)  # explicit engine-level opt-out
-        return
+        return pinned  # explicit engine-level opt-out
     if state_partitions is not None:
-        spark.conf.set(key, str(state_partitions))
-        return
+        return str(state_partitions)
     if spark.sparkContext.getConf().contains(key):
-        return  # explicitly configured at session build — respect it
+        return None  # explicitly configured at session build — respect it
     if spark.conf.get(key) == _SPARK_DEFAULT_SHUFFLE_PARTITIONS:
         target = str(spark.sparkContext.defaultParallelism)
         import logging
@@ -102,15 +103,45 @@ def _ensure_state_parallelism(
             "for streaming state sizing; set it in the session builder to "
             "pin a deliberate value", key, target,
         )
-        spark.conf.set(key, target)
+        return target
+    return None
+
+
+def _run_to_completion(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    overrides: dict[str, str | None],
+) -> None:
+    """Start `writer`'s query, process all available input and stop it,
+    with the non-None `overrides` applied to the session for this run
+    only: every overridden key is restored afterwards — unset if the
+    session had not set it — exceptions included, so no run leaks conf
+    into the queries that follow (ADVICE r15). A stateful query's
+    shuffle partition count needs no session-wide pin: Spark records it
+    in the checkpoint's offset metadata and reuses it on restart."""
+    overrides = {k: v for k, v in overrides.items() if v is not None}
+    prior = {k: spark.conf.get(k, None) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        q = writer.start()
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _plan_uses_keyed_state(df: DataFrame) -> bool:
     """True iff the analyzed plan contains a shard-keyed custom-state
-    operator (`applyInPandasWithState`/`transformWithStateInPandas`
-    grouped on the `_shard` column). Per-key keyed state (fraud alerts)
-    has no shard-count restart invariant, so it is deliberately NOT
-    matched — the warning would be noise there."""
+    operator (`applyInPandasWithState` grouped on the `_shard` column).
+    Per-key keyed state (fraud alerts) has no shard-count restart
+    invariant, so it is deliberately NOT matched — the warning would be
+    noise there."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:  # plan introspection is best-effort diagnostics
@@ -124,37 +155,35 @@ def run_to_memory(
     output_mode: str = "update",
     checkpoint: str | None = None,
     state_partitions: int | None = None,
-    shard_count: int | None = None,
     arrow_batch_rows: int | None = None,
 ) -> None:
     """Run a streaming DataFrame to completion into an in-memory table
     named `name`; query it afterwards with spark.sql/spark.table.
 
-    `shard_count`: the `n_shards` of any shard-keyed stateful operator
-    in `df`'s plan — it is pinned next to the checkpoint via
+    The shard-keyed stateful operators tag their output with their
+    `n_shards`; the tag is pinned next to the checkpoint via
     `stateful.pin_shard_count`, so a restart with a different shard
-    count fails fast instead of silently orphaning state. When omitted,
-    the shard-keyed operators' own tag (`stateful._tag_shard_count`) is
-    picked up automatically; a plan that uses keyed state but carries
-    neither (the tag is dropped by any transformation after the
-    operator) gets a logged warning — the restart protection is then on
-    the caller (ADVICE r12).
+    count fails fast instead of silently orphaning state. A plan that
+    uses shard-keyed state but carries no tag (any transformation after
+    the operator drops it) gets a logged warning — the caller then pins
+    the checkpoint with `stateful.pin_shard_count` (ADVICE r12).
+
+    `state_partitions` and `arrow_batch_rows` hold for this run only;
+    the session's prior values are restored afterwards.
 
     `arrow_batch_rows`: per-query override of
-    `spark.sql.execution.arrow.maxRecordsPerBatch` (restored after the
-    run). applyInPandasWithState re-serializes a group's FULL state into
-    every input chunk's state-info row, so a query whose keyed state is
-    large (reorder buffers under a hot key) must keep chunks-per-group
-    LOW: per-batch input bytes ≈ data + state_size * ceil(group_rows /
-    this value), and Spark's single-buffer input writer degrades
-    catastrophically past ~1 GiB (DirectByteBufferOutputStream's
-    doubling overflows Int there and falls back to copy-per-write).
-    Narrow rows (a few int64s) tolerate large values cheaply."""
+    `spark.sql.execution.arrow.maxRecordsPerBatch`. applyInPandasWithState
+    re-serializes a group's FULL state into every input chunk's
+    state-info row, so a query whose keyed state is large (reorder
+    buffers under a hot key) must keep chunks-per-group LOW: per-batch
+    input bytes ≈ data + state_size * ceil(group_rows / this value), and
+    Spark's single-buffer input writer degrades catastrophically past
+    ~1 GiB (DirectByteBufferOutputStream's doubling overflows Int there
+    and falls back to copy-per-write). Narrow rows (a few int64s)
+    tolerate large values cheaply."""
     spark = df.sparkSession
-    _ensure_state_parallelism(spark, state_partitions)
     ckpt = checkpoint or _checkpoint()
-    if shard_count is None:
-        shard_count = getattr(df, "_ksl_shard_count", None)
+    shard_count = getattr(df, "_ksl_shard_count", None)
     if shard_count is not None:
         from kafka_streams_learning_spark.streaming.stateful import (
             pin_shard_count,
@@ -165,35 +194,28 @@ def run_to_memory(
         import logging
 
         logging.getLogger(__name__).warning(
-            "streaming plan uses keyed state but no shard_count was "
-            "passed or tagged; if a shard-keyed operator is in this "
-            "plan, a restart of checkpoint %s with a different n_shards "
-            "will silently orphan state — pass shard_count=n_shards",
+            "streaming plan uses keyed state but carries no shard-count "
+            "tag; if a shard-keyed operator is in this plan, a restart of "
+            "checkpoint %s with a different n_shards will silently orphan "
+            "state — pin it with stateful.pin_shard_count(checkpoint, "
+            "n_shards)",
             ckpt,
         )
-    arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior_arrow = spark.conf.get(arrow_key, None)
-    if arrow_batch_rows is not None:
-        spark.conf.set(arrow_key, str(arrow_batch_rows))
-    try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        if arrow_batch_rows is not None:
-            if prior_arrow is not None:
-                spark.conf.set(arrow_key, prior_arrow)
-            else:
-                # the session never set the key — unset instead of leaving
-                # this run's override leaked session-wide
-                spark.conf.unset(arrow_key)
+    _run_to_completion(
+        spark,
+        df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt),
+        {
+            "spark.sql.shuffle.partitions": _state_partitions(
+                spark, state_partitions
+            ),
+            "spark.sql.execution.arrow.maxRecordsPerBatch": (
+                None if arrow_batch_rows is None else str(arrow_batch_rows)
+            ),
+        },
+    )
 
 
 def run_collect_batches(
@@ -203,21 +225,19 @@ def run_collect_batches(
 ) -> list[list]:
     """Run to completion, capturing each micro-batch's emitted rows in
     order — the update-mode emission sequence as observable behavior."""
-    _ensure_state_parallelism(df.sparkSession)
     batches: list[list] = []
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         batches.append(batch_df.collect())
 
-    q = (
+    spark = df.sparkSession
+    _run_to_completion(
+        spark,
         df.writeStream.outputMode(output_mode)
         .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint or _checkpoint())
-        .start()
+        .option("checkpointLocation", checkpoint or _checkpoint()),
+        {"spark.sql.shuffle.partitions": _state_partitions(spark)},
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
     return batches
 
 

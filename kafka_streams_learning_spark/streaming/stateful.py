@@ -10,21 +10,21 @@ executors and checkpointed (the changelog-topic equivalent,
 `FraudProcessor.java:22`); each micro-batch touches only the keys present
 in the batch, Arrow-batched — no per-row Python round-trips.
 
-Implementation: `applyInPandasWithState` (stable since Spark 3.4).
-Spark 4's `transformWithStateInPandas` is the successor API; it requires
-the protobuf package at the Python worker, which this container lacks, so
-`fraud_alert_stream_tws` is provided but gated behind an import check.
+Implementation: `applyInPandasWithState` (stable since Spark 3.4). The
+five shard-keyed operators — `fraud_alert_stream_sharded`,
+`sliding_count_stream`, `asof_join_stream`, `ordered_sliding_count_stream`
+and `ordered_asof_join_stream` — are each one call to `_shard_keyed_state`,
+which owns the `_shard` column, the optional watermark + EventTimeTimeout,
+the state-budget default and the shard-count tag.
 
-Operational contracts (apply to every shard-keyed operator below —
-`sliding_count_stream`, `asof_join_stream`, `ordered_sliding_count_stream`,
-`ordered_asof_join_stream`):
+Operational contracts (apply to every shard-keyed operator):
 
 - **Shard count is part of the checkpoint format.** The state key is
   `hash(user_id) % n_shards`; restarting an existing checkpoint with a
   different `n_shards` re-hashes users onto other shards and silently
-  orphans their state. Use `pin_shard_count(checkpoint_dir, n_shards)`
-  (called automatically by `runner.run_to_memory(shard_count=...)`) to
-  persist the count next to the checkpoint and fail fast on mismatch.
+  orphans their state. `pin_shard_count(checkpoint_dir, n_shards)`
+  persists the count next to the checkpoint and fails fast on mismatch;
+  `runner.run_to_memory` calls it from the operator's output tag.
 - **Checkpoint format breaks (r11, r12).** The r11 shard re-keying
   changed the grouping key (user_id → _shard) and both state schemas;
   r12 re-typed the shard state columns from array<long>/array<string>
@@ -48,6 +48,7 @@ Operational contracts (apply to every shard-keyed operator below —
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -59,54 +60,45 @@ ALERT_OUTPUT_SCHEMA = (
 _STATE_SCHEMA = "cnt long"
 
 
-def _alert_walk(
-    key_val, cnt: int, pdf: pd.DataFrame, threshold: float, alert_after: int
-) -> tuple[int, pd.DataFrame | None]:
-    """The alert walk shared by BOTH stateful-API arms
-    (`applyInPandasWithState` and `transformWithStateInPandas`), so the
-    arms cannot drift. A key's micro-batch is sorted by ts/id — the
+def _alert_fn(threshold: float, alert_after: int):
+    """Per-key alert walk. A key's micro-batch is sorted by ts/id — the
     streaming analogue of the batch oracle's ORDER BY. The counter is a
     pure running count over qualifying rows, so the walk vectorizes:
     threshold filter, then cumsum offset by the checkpointed count — no
-    per-row Python. Returns (new_count, alert frame or None)."""
-    import numpy as np
+    per-row Python."""
 
-    pdf = pdf.sort_values(["ts", "record_id"])
-    amounts = pdf["amount"].to_numpy(dtype="float64")
-    qual = pdf[amounts >= threshold]  # below-gate records don't count (:41-43)
-    running = cnt + np.arange(1, len(qual) + 1, dtype="int64")
-    cnt += len(qual)
-    fire = running > alert_after  # strictly >, fires from the 4th (:61)
-    if not fire.any():
-        return cnt, None
-    rc = running[fire]
-    return cnt, pd.DataFrame(
-        {
-            "key": key_val,
-            "record_id": qual["record_id"].to_numpy(dtype="int64")[fire],
-            "amount": qual["amount"].to_numpy(dtype="float64")[fire],
-            "running_cnt": rc,
-            "alert": (
-                f"High-value order streak for {key_val}: "
-                + pd.Series(rc).astype(str)
-                + f" orders >= {threshold:.0f}"
-            ).to_numpy(),
-        }
-    )
-
-
-def _alert_fn(threshold: float, alert_after: int):
     def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        key_val = key[0]
         cnt = state.get[0] if state.exists else 0
         # concat chunks BEFORE sorting — a key's micro-batch may span
         # multiple Arrow chunks (per-chunk sorts would interleave)
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        cnt, out = _alert_walk(key[0], cnt, pdf, threshold, alert_after)
-        state.update((cnt,))
-        if out is not None:
-            yield out
+        pdf = pdf.sort_values(["ts", "record_id"])
+        amounts = pdf["amount"].to_numpy(dtype="float64")
+        qual = pdf[amounts >= threshold]  # below-gate records don't count (:41-43)
+        running = cnt + np.arange(1, len(qual) + 1, dtype="int64")
+        state.update((cnt + len(qual),))
+        fire = running > alert_after  # strictly >, fires from the 4th (:61)
+        if not fire.any():
+            return
+        rc = running[fire]
+        yield pd.DataFrame(
+            {
+                "key": key_val,
+                "record_id": qual["record_id"].to_numpy(dtype="int64")[fire],
+                "amount": qual["amount"].to_numpy(dtype="float64")[fire],
+                "running_cnt": rc,
+                "alert": (
+                    f"High-value order streak for {key_val}: "
+                    + pd.Series(rc).astype(str)
+                    + f" orders >= {threshold:.0f}"
+                ).to_numpy(),
+            }
+        )
 
     return fn
 
@@ -116,44 +108,35 @@ def fraud_alert_stream(
     key_col: str,
     threshold: float,
     alert_after: int = 3,
-    impl: str = "auto",
+    impl: str = "apply",
     n_shards: int | None = None,
 ) -> DataFrame:
     """Streaming fraud alerts over a stream with columns
     (key_col, record_id, amount, ts). Emits one alert row per qualifying
     record from the (alert_after+1)-th onward, exactly once per record.
-    Null-keyed records are DROPPED at entry in every arm — the Kafka
-    Streams groupByKey semantics (ref
-    processor/FraudDetectionApp.java:104 groups by user id; Kafka
-    Streams discards null-key records at repartition/groupBy). Before
-    r14 the apply/tws arms processed a null key as an ordinary group
-    while the sharded arm raised from `_pack_str` mid-batch (ADVICE r13)
-    — the entry filter restores the "impl can never change emitted
-    rows" contract.
+    Null-keyed records are DROPPED at entry in both arms — the Kafka
+    Streams groupByKey semantics (ref processor/FraudDetectionApp.java:104
+    groups by user id; Kafka Streams discards null-key records at
+    repartition/groupBy) — so the impl choice can never change emitted
+    rows, on dirty input too (ADVICE r13).
 
-    `impl` selects the state API: "apply" = `applyInPandasWithState`
-    (works everywhere), "tws" = `transformWithStateInPandas` (Spark ≥ 4
-    successor, needs protobuf on workers), "sharded" = the bounded-shard
+    `impl` selects the state keying: "apply" (default) = one
+    `applyInPandasWithState` group per key, the reference the sharded
+    arm's parity tests compare against; "sharded" = the bounded-shard
     re-keying (`fraud_alert_stream_sharded` — invocations O(shards ×
     batches) instead of O(distinct keys × batches); the r13 sweep-9 arm
-    for high key cardinality), "auto" (default) = tws when protobuf is
-    importable, else apply (VERDICT r10 item 8). The apply/tws arms walk
-    the identical `_alert_walk` core; the sharded arm's parity with them
-    is pinned by tests + the skew probe, so the choice can never change
-    emitted rows. `n_shards` sizes the sharded arm (default
-    `REORDER_SHARDS`); it is ignored by the per-key arms, whose state
-    key is the user key itself."""
+    for high key cardinality). `n_shards` sizes the sharded arm (default
+    `REORDER_SHARDS`); it is ignored by the per-key arm, whose state key
+    is the user key itself."""
     from pyspark.sql import functions as F
 
-    if impl not in ("auto", "apply", "tws", "sharded"):
-        raise ValueError(f"impl must be auto|apply|tws|sharded, got {impl!r}")
+    if impl not in ("apply", "sharded"):
+        raise ValueError(f"impl must be apply|sharded, got {impl!r}")
     df = df.where(F.col(key_col).isNotNull())
     if impl == "sharded":
         return fraud_alert_stream_sharded(
             df, key_col, threshold, alert_after, n_shards=n_shards
         )
-    if impl == "tws" or (impl == "auto" and _has_protobuf()):
-        return fraud_alert_stream_tws(df, key_col, threshold, alert_after)
     return df.groupBy(key_col).applyInPandasWithState(
         _alert_fn(threshold, alert_after),
         outputStructType=ALERT_OUTPUT_SCHEMA,
@@ -189,8 +172,8 @@ def _sharded_alert_fn(threshold: float, alert_after: int,
     record_id), segmented cumsum of qualifying rows offset by each key's
     checkpointed count), so invocations are O(shards × batches) instead
     of O(distinct keys × batches). Emitted rows are bit-identical to
-    `_alert_walk`'s per-key output: the per-key row order inside a
-    (key, ts, record_id) sort IS _alert_walk's (ts, record_id) sort, and
+    `_alert_fn`'s per-key output: the per-key row order inside a
+    (key, ts, record_id) sort IS _alert_fn's (ts, record_id) sort, and
     counts are per-key affairs — keys can't interact."""
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
@@ -297,8 +280,6 @@ def fraud_alert_stream_sharded(
     (`pin_shard_count` — auto-pinned via the output tag)."""
     from pyspark.sql import functions as F
 
-    if n_shards is None:
-        n_shards = REORDER_SHARDS
     # same null-key drop as the fraud_alert_stream entry (ADVICE r13):
     # direct callers of the sharded arm get identical semantics, and a
     # null key can no longer reach _pack_str mid-batch
@@ -306,36 +287,57 @@ def fraud_alert_stream_sharded(
         F.col(key_col).cast("string").alias("key"),
         "record_id", "amount", "ts",
     )
-    return _tag_shard_count(
-        base.withColumn(
-            "_shard", F.pmod(F.xxhash64("key"), F.lit(n_shards))
-        )
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _sharded_alert_fn(
-                threshold, alert_after,
-                _max_state_bytes or MAX_STATE_BYTES_PER_SHARD,
-            ),
-            outputStructType=ALERT_OUTPUT_SCHEMA,
-            stateStructType=_SHARDED_ALERT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        ),
-        n_shards,
+    return _shard_keyed_state(
+        base, "key", n_shards or REORDER_SHARDS,
+        partial(_sharded_alert_fn, threshold, alert_after),
+        ALERT_OUTPUT_SCHEMA, _SHARDED_ALERT_STATE_SCHEMA,
+        max_state_bytes=_max_state_bytes,
     )
 
 
-def _tag_shard_count(df: DataFrame, n_shards: int) -> DataFrame:
-    """Attach the operator's shard count to the returned DataFrame so
-    `runner.run_to_memory` can pin the checkpoint automatically (ADVICE
-    r12: callers that forgot to thread `shard_count` through silently
-    lost the restart protection the pin exists for). The tag is a plain
-    Python attribute — any further transformation creates a NEW
-    DataFrame object and drops it, which is the safe direction: an
-    untagged stateful plan triggers the runner's warning instead of a
-    possibly-wrong auto-pin."""
-    df._ksl_shard_count = n_shards
-    return df
+def _shard_keyed_state(
+    df: DataFrame,
+    key_col: str,
+    n_shards: int,
+    make_fn,
+    output_schema: str,
+    state_schema: str,
+    disorder: str | None = None,
+    max_state_bytes: int | None = None,
+) -> DataFrame:
+    """The one builder behind every shard-keyed operator: re-key `df`
+    onto `pmod(xxhash64(key_col), n_shards)`, run the group fn
+    `make_fn(max_state_bytes=...)` per shard through
+    `applyInPandasWithState`, and tag the result with `n_shards`.
+
+    With a `disorder` (a time-interval string) the stream is watermarked
+    on `ts` by that delay and shards time out on event time, so buffered
+    rows flush as the watermark advances even when a shard receives no
+    new data; without one the operator is ordered-arrival and needs no
+    timeout. `max_state_bytes` defaults to `MAX_STATE_BYTES_PER_SHARD`.
+
+    The tag is a plain Python attribute that `runner.run_to_memory`
+    reads to pin the checkpoint's shard count (ADVICE r12: callers that
+    had to thread the count through by hand forgot to). Any further
+    transformation creates a NEW DataFrame object and drops it, which is
+    the safe direction: an untagged stateful plan triggers the runner's
+    warning instead of a possibly-wrong auto-pin."""
+    from pyspark.sql import functions as F
+
+    sharded = df.withColumn(
+        "_shard", F.pmod(F.xxhash64(key_col), F.lit(n_shards))
+    )
+    if disorder is not None:
+        sharded = sharded.withWatermark("ts", disorder)
+    out = sharded.groupBy("_shard").applyInPandasWithState(
+        make_fn(max_state_bytes=max_state_bytes or MAX_STATE_BYTES_PER_SHARD),
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout" if disorder is None else "EventTimeTimeout",
+    )
+    out._ksl_shard_count = n_shards
+    return out
 
 
 def pin_shard_count(checkpoint_dir: str, n_shards: int) -> None:
@@ -416,24 +418,12 @@ def sliding_count_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (user_id, event_id, ts)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _sliding_shard_fn(lookback_micros, release_all=True,
-                              max_composite=_max_composite,
-                              max_state_bytes=_max_state_bytes
-                              or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=SLIDING_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        ),
-        n_shards,
+    return _shard_keyed_state(
+        df, "user_id", n_shards,
+        partial(_sliding_shard_fn, lookback_micros, release_all=True,
+                max_composite=_max_composite),
+        SLIDING_OUTPUT_SCHEMA, _ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
+        max_state_bytes=_max_state_bytes,
     )
 
 
@@ -478,24 +468,12 @@ def asof_join_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (event_id, user_id, ts, event_type)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _asof_shard_fn(match_type, release_all=True,
-                           max_composite=_max_composite,
-                           max_state_bytes=_max_state_bytes
-                           or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_ASOF_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        ),
-        n_shards,
+    return _shard_keyed_state(
+        df, "user_id", n_shards,
+        partial(_asof_shard_fn, match_type, release_all=True,
+                max_composite=_max_composite),
+        ASOF_OUTPUT_SCHEMA, _ORDERED_ASOF_STATE_SCHEMA_SHARDED,
+        max_state_bytes=_max_state_bytes,
     )
 
 
@@ -739,9 +717,8 @@ def _sliding_release(ru, rt, tb_u, tb_t, lookback_micros: int,
     return cnt, users[kept_c // span], kept_c % span + lo
 
 
-def _sliding_shard_fn(lookback_micros: int, release_all: bool = False,
-                      max_composite: int = 2**62,
-                      max_state_bytes: int = MAX_STATE_BYTES_PER_SHARD):
+def _sliding_shard_fn(lookback_micros: int, max_composite: int,
+                      max_state_bytes: int, release_all: bool = False):
     def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -851,24 +828,12 @@ def ordered_sliding_count_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (user_id, event_id, ts)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .withWatermark("ts", disorder)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _sliding_shard_fn(lookback_micros, max_composite=_max_composite,
-                              max_state_bytes=_max_state_bytes
-                              or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=SLIDING_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        ),
-        n_shards,
+    return _shard_keyed_state(
+        df, "user_id", n_shards,
+        partial(_sliding_shard_fn, lookback_micros,
+                max_composite=_max_composite),
+        SLIDING_OUTPUT_SCHEMA, _ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
+        disorder=disorder, max_state_bytes=_max_state_bytes,
     )
 
 
@@ -950,9 +915,8 @@ def _asof_release(ru, rt, ri, is_p, su_u, su_t, su_id,
     return p_t[safe], p_id[safe], vis, nu, nt, nid
 
 
-def _asof_shard_fn(match_type: str, release_all: bool = False,
-                   max_composite: int = 2**62,
-                   max_state_bytes: int = MAX_STATE_BYTES_PER_SHARD):
+def _asof_shard_fn(match_type: str, max_composite: int,
+                   max_state_bytes: int, release_all: bool = False):
     def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -1071,78 +1035,9 @@ def ordered_asof_join_stream(
     docstring / `pin_shard_count`).
 
     Input columns: (event_id, user_id, ts, event_type)."""
-    from pyspark.sql import functions as F
-
-    return _tag_shard_count(
-        df.withColumn(
-            "_shard", F.pmod(F.xxhash64("user_id"), F.lit(n_shards))
-        )
-        .withWatermark("ts", disorder)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _asof_shard_fn(match_type, max_composite=_max_composite,
-                           max_state_bytes=_max_state_bytes
-                           or MAX_STATE_BYTES_PER_SHARD),
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=_ORDERED_ASOF_STATE_SCHEMA_SHARDED,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        ),
-        n_shards,
-    )
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def fraud_alert_stream_tws(
-    df: DataFrame,
-    key_col: str,
-    threshold: float,
-    alert_after: int = 3,
-) -> DataFrame:
-    """transformWithStateInPandas variant (Spark ≥ 4 successor API —
-    richer state types, timers, TTL). Same semantics as
-    `fraud_alert_stream`; requires the protobuf package on workers."""
-    if not _has_protobuf():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package on "
-            "Python workers, which is not installed in this environment; "
-            "use fraud_alert_stream (applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    threshold_ = threshold
-    alert_after_ = alert_after
-
-    class FraudAlertProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.count = handle.getValueState("qualifying_count", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            cnt = self.count.get()[0] if self.count.exists() else 0
-            # the exact walk of the shipped arm — shared code, no drift
-            pdf = pd.concat(list(rows), ignore_index=True)
-            cnt, out = _alert_walk(key[0], cnt, pdf, threshold_, alert_after_)
-            self.count.update((cnt,))
-            if out is not None:
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=FraudAlertProcessor(),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
+    return _shard_keyed_state(
+        df, "user_id", n_shards,
+        partial(_asof_shard_fn, match_type, max_composite=_max_composite),
+        ASOF_OUTPUT_SCHEMA, _ORDERED_ASOF_STATE_SCHEMA_SHARDED,
+        disorder=disorder, max_state_bytes=_max_state_bytes,
     )

@@ -233,17 +233,34 @@ def test_fraud_alert_null_keys_dropped_in_every_arm(spark, tmpdir):
 def test_fraud_alert_stream_threads_n_shards(spark, tmpdir):
     """ADVICE r13: fraud_alert_stream(impl="sharded") must forward
     n_shards to the sharded arm (callers used to have to bypass the impl
-    switch). Pin via the shard-count tag the runner consumes."""
+    switch). Pin via the shard-count tag the runner consumes. The impl
+    switch itself: unknown values are rejected loudly, and the default
+    is the per-key `applyInPandasWithState` arm grouped on the key."""
     d = f"{tmpdir}/nshards"
     base = ts("2024-01-01T00:00:00")
     stage_explicit_chunks(
         spark, [[("a", 1, 600.0, base)]], EVENTS_SCHEMA, d
     )
+    stream = replay_stream(spark, d, EVENTS_SCHEMA)
     out = stateful.fraud_alert_stream(
-        replay_stream(spark, d, EVENTS_SCHEMA), "key",
-        threshold=500.0, impl="sharded", n_shards=7,
+        stream, "key", threshold=500.0, impl="sharded", n_shards=7,
     )
     assert out._ksl_shard_count == 7
+
+    for bad in ("auto", "tws", "rocksdb"):
+        with pytest.raises(ValueError, match="impl"):
+            stateful.fraud_alert_stream(stream, "key", 500.0, impl=bad)
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    for per_key in (
+        stateful.fraud_alert_stream(stream, "key", 500.0, impl="apply"),
+        stateful.fraud_alert_stream(stream, "key", 500.0),
+    ):
+        p = plan(per_key)
+        assert "FlatMapGroupsInPandasWithState" in p, p
+        assert "_shard" not in p and not hasattr(per_key, "_ksl_shard_count")
 
 
 ASOF_SCHEMA = "event_id long, user_id long, ts timestamp, event_type string"
@@ -715,22 +732,143 @@ def test_interactive_state_store_fetch(spark, tmpdir):
     assert got == [(base, 2), (base + dt.timedelta(minutes=1), 1)]
 
 
-def test_state_partitions_opt_out_conf_pins_value(spark):
+def test_state_partitions_opt_out_conf_pins_value(spark, tmpdir):
     """`ksl.state.partitions` is the engine-level escape hatch for the one
     case the builder-conf check cannot see (a deliberate 200 set on a
-    reused context): it is consulted first and always wins."""
-    from kafka_streams_learning_spark.streaming.runner import (
-        _ensure_state_parallelism,
-    )
+    reused context): it is consulted first and always wins — over the
+    caller's `state_partitions` too — and is the partition count the
+    stateful query runs with, recorded in its checkpoint."""
+    import json
+    import os
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    shuffle = "spark.sql.shuffle.partitions"
+    base = ts("2024-01-01T00:00:00")
+    stage_explicit_chunks(
+        spark, [[("a", 1, 10.0, base)]], EVENTS_SCHEMA, f"{tmpdir}/in"
+    )
+    stream = replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA)
+    prev = spark.conf.get(shuffle)
     try:
         spark.conf.set("ksl.state.partitions", "7")
-        _ensure_state_parallelism(spark)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        ckpt = f"{tmpdir}/ckpt"
+        runner.run_to_memory(
+            stream.groupBy("key").count(), "opt_out_pin", "complete",
+            checkpoint=ckpt, state_partitions=4,
+        )
+        with open(os.path.join(ckpt, "offsets", "0")) as fh:
+            meta = json.loads(fh.read().splitlines()[1])
+        assert meta["conf"][shuffle] == "7"
+        assert spark.conf.get(shuffle) == prev
     finally:
         spark.conf.unset("ksl.state.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(shuffle, prev)
+
+
+def test_arrow_batch_override_unsets_when_previously_unset(spark, tmpdir):
+    """run_to_memory's per-query arrow.maxRecordsPerBatch override must
+    not leak session-wide when the session never set the key (ADVICE
+    r12): after the run the key is unset again, not pinned to the
+    override."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        base = ts("2024-01-01T00:00:00")
+        rows = [[("a", 1, 10.0, base)]]
+        stage_explicit_chunks(spark, rows, EVENTS_SCHEMA, f"{tmpdir}/a")
+        stream = replay_stream(spark, f"{tmpdir}/a", EVENTS_SCHEMA)
+        runner.run_to_memory(
+            stream.groupBy("key").count(), "arrow_unset_out", "complete",
+            arrow_batch_rows=12345,
+        )
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prior is not None:
+            spark.conf.set(key, prior)
+
+
+def test_run_conf_is_scoped_and_pinned_in_checkpoint(spark, tmpdir):
+    """run_to_memory and run_collect_batches apply their shuffle-partition
+    and Arrow batch-size settings for one run only (ADVICE r15): the
+    session conf is the same before and after every run — a failing run
+    included, and a key the session never set is unset again — while the
+    checkpoint's offset metadata records the partition count the stateful
+    query ran with (`ksl.state.partitions`, which beats every other
+    sizing), so a restart keeps it."""
+    import json
+    import os
+
+    shuffle = "spark.sql.shuffle.partitions"
+    arrow = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    base = ts("2024-01-01T00:00:00")
+    stage_explicit_chunks(
+        spark, [[("a", 1, 10.0, base), ("b", 2, 10.0, base)]],
+        EVENTS_SCHEMA, f"{tmpdir}/in",
+    )
+
+    def counted():
+        stream = replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA)
+        return stream.groupBy("key").count()
+
+    def failing():
+        stream = replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA)
+        return stream.select(F.expr("assert_true(amount < 0)").alias("x"))
+
+    def session_conf():
+        return spark.conf.get(shuffle, None), spark.conf.get(arrow, None)
+
+    def checkpoint_partitions(ckpt):
+        with open(os.path.join(ckpt, "offsets", "0")) as fh:
+            meta = json.loads(fh.read().splitlines()[1])
+        return meta["conf"][shuffle]
+
+    prior_arrow = spark.conf.get(arrow, None)
+    spark.conf.set("ksl.state.partitions", "7")
+    try:
+        # the Arrow key unset (the override must be unset again), then set
+        for arrow_prior in (None, "777"):
+            if arrow_prior is None:
+                spark.conf.unset(arrow)
+            else:
+                spark.conf.set(arrow, arrow_prior)
+            before = session_conf()
+            assert before[1] == arrow_prior and before[0] != "7"
+
+            ckpt = f"{tmpdir}/mem-{arrow_prior}"
+            runner.run_to_memory(
+                counted(), f"scoped_mem_{arrow_prior}", "complete",
+                checkpoint=ckpt, arrow_batch_rows=12345,
+            )
+            assert session_conf() == before
+            assert checkpoint_partitions(ckpt) == "7"
+            got = spark.table(f"scoped_mem_{arrow_prior}").collect()
+            assert sorted(map(tuple, got)) == [("a", 1), ("b", 1)]
+
+            ckpt = f"{tmpdir}/batches-{arrow_prior}"
+            batches = runner.run_collect_batches(
+                counted(), "complete", checkpoint=ckpt
+            )
+            assert session_conf() == before
+            assert checkpoint_partitions(ckpt) == "7"
+            assert sorted(tuple(r) for b in batches for r in b) == [
+                ("a", 1), ("b", 1)
+            ]
+
+            with pytest.raises(Exception, match="amount < 0"):
+                runner.run_to_memory(
+                    failing(), f"scoped_fail_{arrow_prior}", "append",
+                    arrow_batch_rows=12345,
+                )
+            assert session_conf() == before
+            with pytest.raises(Exception, match="amount < 0"):
+                runner.run_collect_batches(failing(), "append")
+            assert session_conf() == before
+    finally:
+        spark.conf.unset("ksl.state.partitions")
+        if prior_arrow is None:
+            spark.conf.unset(arrow)
+        else:
+            spark.conf.set(arrow, prior_arrow)
 
 
 def test_hopping_append_and_late_drop(spark, tmpdir):
@@ -835,34 +973,6 @@ def test_checkpoint_recovery_quantile_state(spark, tmpdir):
         "a": (4, 10.0, 40.0, 25.0),
         "b": (1, 5.0, 5.0, 5.0),
     }
-
-
-def test_fraud_alerts_tws_capability_probe(spark, tmpdir):
-    """§7.5: the `transformWithStateInPandas` successor arm, gated on a
-    runtime capability probe (the same pattern as the Kafka broker gate).
-    With protobuf on the Python workers the arm must run end-to-end and
-    emit exactly what the shipped `applyInPandasWithState` arm emits;
-    without it (this sandbox has no protobuf and installs are
-    unavailable), the documented hard gate must fire loudly at
-    construction — never silently degrade to the other arm."""
-    base = ts("2024-01-01T00:00:00")
-    mk = lambda i, amt: ("c1", i, amt, base + dt.timedelta(minutes=i))
-    chunks = [
-        [mk(1, 600.0), mk(2, 700.0)],
-        [mk(3, 100.0), mk(4, 800.0)],
-        [mk(5, 900.0), mk(6, 950.0)],
-    ]
-    stage_explicit_chunks(spark, chunks, EVENTS_SCHEMA, tmpdir)
-    stream = replay_stream(spark, tmpdir, EVENTS_SCHEMA)
-    if not stateful._has_protobuf():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful.fraud_alert_stream_tws(stream, "key", threshold=500.0)
-        return
-    alerts = stateful.fraud_alert_stream_tws(stream, "key", threshold=500.0)
-    batches = runner.run_collect_batches(alerts, "append")
-    flat = [(r.record_id, r.running_cnt) for b in batches for r in b]
-    assert flat == [(5, 4), (6, 5)]
-    assert all("High-value order streak" in r.alert for b in batches for r in b)
 
 
 def test_ordered_asof_checkpoint_recovery(spark, tmpdir):
@@ -1281,55 +1391,6 @@ def test_dedup_state_kill_and_resume_matches_uninterrupted(spark, tmpdir):
         assert keepers[1] == 2, keepers  # doc 1 (pre) + 21 (post)
 
 
-def test_fraud_alert_auto_dispatch_picks_tws_when_protobuf_present(
-    spark, tmpdir, monkeypatch
-):
-    """VERDICT r10 item 8: `fraud_alert_stream(impl="auto")` must select
-    the Spark-4 `transformWithStateInPandas` arm the moment the
-    environment gains protobuf, and the battle-tested
-    `applyInPandasWithState` arm otherwise — with no silent third
-    behavior and loud rejection of unknown impl values."""
-    base = ts("2024-01-01T00:00:00")
-    stage_explicit_chunks(
-        spark, [[("c1", 1, 600.0, base)]], EVENTS_SCHEMA, tmpdir
-    )
-    stream = replay_stream(spark, tmpdir, EVENTS_SCHEMA)
-
-    with pytest.raises(ValueError, match="impl"):
-        stateful.fraud_alert_stream(stream, "key", 500.0, impl="rocksdb")
-
-    # plan-shape probe: which stateful operator did dispatch choose?
-    def node(df):
-        plan = df._jdf.queryExecution().analyzed().toString()
-        assert ("transformWithStateInPandas" in plan) or (
-            "applyInPandasWithState" in plan or "FlatMapGroupsInPandasWithState" in plan
-        ), plan
-        return "tws" if "transformWithStateInPandas" in plan else "apply"
-
-    forced_apply = stateful.fraud_alert_stream(stream, "key", 500.0, impl="apply")
-    assert node(forced_apply) == "apply"
-
-    if stateful._has_protobuf():
-        # real-protobuf environment: auto must pick tws end-to-end
-        assert node(stateful.fraud_alert_stream(stream, "key", 500.0)) == "tws"
-    else:
-        # sandbox: auto falls back to apply; forcing tws fails loudly
-        assert node(stateful.fraud_alert_stream(stream, "key", 500.0)) == "apply"
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful.fraud_alert_stream(stream, "key", 500.0, impl="tws")
-        # simulate protobuf appearing: auto must route to the tws arm
-        # (the arm's own gate re-fires because protobuf is truly absent —
-        # proving dispatch reached it, not the apply fallback)
-        monkeypatch.setattr(stateful, "_has_protobuf", lambda: True)
-
-        def tws_marker(*a, **k):
-            raise RuntimeError("tws-arm-reached")
-
-        monkeypatch.setattr(stateful, "fraud_alert_stream_tws", tws_marker)
-        with pytest.raises(RuntimeError, match="tws-arm-reached"):
-            stateful.fraud_alert_stream(stream, "key", 500.0)
-
-
 def test_pin_shard_count_fails_fast_on_mismatch(tmpdir):
     """`pin_shard_count` (ADVICE r11): the shard count is part of the
     checkpoint format for the shard-keyed stateful operators — the pin
@@ -1407,54 +1468,69 @@ def test_state_budget_boundary_under_budget_completes(spark, tmpdir):
         run(exact_state_bytes - 1, "budget_below_bound")
 
 
-def test_shard_count_tag_auto_pins_checkpoint(spark, tmpdir):
-    """The shard-keyed operators tag their output with n_shards and
-    run_to_memory pins the checkpoint from the tag when the caller
-    doesn't pass shard_count (ADVICE r12) — a restart with a different
-    count then fails fast even for callers that forgot to thread it."""
+SLIDING_SCHEMA = "user_id long, event_id long, ts timestamp"
+HOUR_MICROS = 60 * 60 * 1_000_000
+
+# every shard-keyed operator: (input schema, row i at time t, build)
+SHARD_KEYED_OPERATORS = {
+    "fraud_alert_stream_sharded": (
+        EVENTS_SCHEMA,
+        lambda i, t: (f"k{i}", 100 + i, 600.0, t),
+        lambda df, n: stateful.fraud_alert_stream_sharded(
+            df, "key", 500.0, n_shards=n
+        ),
+    ),
+    "sliding_count_stream": (
+        SLIDING_SCHEMA,
+        lambda i, t: (i, 100 + i, t),
+        lambda df, n: stateful.sliding_count_stream(
+            df, HOUR_MICROS, n_shards=n
+        ),
+    ),
+    "asof_join_stream": (
+        ASOF_SCHEMA,
+        lambda i, t: (100 + i, i, t, "purchase"),
+        lambda df, n: stateful.asof_join_stream(df, n_shards=n),
+    ),
+    "ordered_sliding_count_stream": (
+        SLIDING_SCHEMA,
+        lambda i, t: (i, 100 + i, t),
+        lambda df, n: stateful.ordered_sliding_count_stream(
+            df, HOUR_MICROS, disorder="1 hour", n_shards=n
+        ),
+    ),
+    "ordered_asof_join_stream": (
+        ASOF_SCHEMA,
+        lambda i, t: (100 + i, i, t, "purchase"),
+        lambda df, n: stateful.ordered_asof_join_stream(
+            df, disorder="1 hour", n_shards=n
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(SHARD_KEYED_OPERATORS))
+def test_shard_count_tag_auto_pins_checkpoint(spark, tmpdir, op):
+    """Every shard-keyed operator tags its output with n_shards and
+    run_to_memory pins the checkpoint from the tag, its only source
+    (ADVICE r12) — a restart with a different count then fails fast
+    even for callers that never thread the count through."""
     import json
     import os
 
+    schema, row, build = SHARD_KEYED_OPERATORS[op]
     base = ts("2024-01-01T00:00:00")
-    schema = "user_id long, event_id long, ts timestamp"
-    rows = [[(u, 100 + u, base + dt.timedelta(minutes=u)) for u in range(5)]]
+    rows = [[row(u, base + dt.timedelta(minutes=u)) for u in range(5)]]
     stage_explicit_chunks(spark, rows, schema, f"{tmpdir}/stage")
-    out = stateful.sliding_count_stream(
-        replay_stream(spark, f"{tmpdir}/stage", schema),
-        60 * 60 * 1_000_000,
-        n_shards=6,
-    )
+    out = build(replay_stream(spark, f"{tmpdir}/stage", schema), 6)
     assert out._ksl_shard_count == 6
     ckpt = f"{tmpdir}/ckpt"
-    runner.run_to_memory(out, "tag_pin_out", "append",
+    runner.run_to_memory(out, f"tag_pin_{op}", "append",
                          checkpoint=ckpt, state_partitions=4)
     with open(os.path.join(ckpt, "ksl-shard-count.json")) as fh:
         assert json.load(fh)["n_shards"] == 6
     with pytest.raises(ValueError, match="n_shards=6"):
         stateful.pin_shard_count(ckpt, 12)
-
-
-def test_arrow_batch_override_unsets_when_previously_unset(spark, tmpdir):
-    """run_to_memory's per-query arrow.maxRecordsPerBatch override must
-    not leak session-wide when the session never set the key (ADVICE
-    r12): after the run the key is unset again, not pinned to the
-    override."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior = spark.conf.get(key, None)
-    spark.conf.unset(key)
-    try:
-        base = ts("2024-01-01T00:00:00")
-        rows = [[("a", 1, 10.0, base)]]
-        stage_explicit_chunks(spark, rows, EVENTS_SCHEMA, f"{tmpdir}/a")
-        stream = replay_stream(spark, f"{tmpdir}/a", EVENTS_SCHEMA)
-        runner.run_to_memory(
-            stream.groupBy("key").count(), "arrow_unset_out", "complete",
-            arrow_batch_rows=12345,
-        )
-        assert spark.conf.get(key, None) is None
-    finally:
-        if prior is not None:
-            spark.conf.set(key, prior)
 
 
 def test_all_staged_one_batch_derives_file_count(spark, tmpdir):
