@@ -87,8 +87,10 @@ def format_bench_line(
     timings — turning a noisy window into an unauditable round). Shrink
     order under the size guard: cap the stamp at the STAMP_CAP most
     divergent rows → drop the stamp entirely → reduce timing precision
-    to 1 decimal; query rows are never dropped. The full stamp always
-    lives in BENCH_LOCAL.json."""
+    to 1 decimal; query rows are never dropped, and `paired_divergent_n`
+    is printed whenever any row diverged, stamp or no stamp. A line
+    still over the limit after all that is returned with a warning on
+    stderr. The full stamp always lives in BENCH_LOCAL.json."""
 
     def _divergence(item: tuple[str, float]) -> tuple[float, str]:
         k, med = item
@@ -108,8 +110,8 @@ def format_bench_line(
         }
         if stamp:
             payload["paired_median_divergent"] = stamp
-            if len(paired_stamp) > len(stamp):
-                payload["paired_divergent_n"] = len(paired_stamp)
+        if paired_stamp:
+            payload["paired_divergent_n"] = len(paired_stamp)
         payload["setup"] = setup
         payload["all_in_wall"] = all_in_wall
         payload["sf"] = sf
@@ -120,6 +122,13 @@ def format_bench_line(
         if len(line) <= MAX_LINE_CHARS:
             return line
         line = _render(stamp, ndigits)
+    if len(line) > MAX_LINE_CHARS:
+        print(
+            f"bench.py: WARNING: bench line is {len(line)} chars even at "
+            f"1-decimal timings (limit {MAX_LINE_CHARS}); a captured "
+            "stdout tail will cut it — the full record is in BENCH_LOCAL.json",
+            file=sys.stderr,
+        )
     return line
 
 

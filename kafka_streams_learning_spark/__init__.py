@@ -14,7 +14,13 @@ Nothing here is a translation of the reference's Java topology code; see
 SURVEY.md for the semantic map (each operator cites reference file:line).
 """
 
-from kafka_streams_learning_spark.session import get_spark
+from kafka_streams_learning_spark._zipimport_guard import install as _install_zip_guard
+
+# First, so every Python worker that unpickles an engine function stops
+# re-reading pyspark.zip and the spark-core jar on each task.
+_install_zip_guard()
+
+from kafka_streams_learning_spark.session import get_spark  # noqa: E402
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -57,6 +57,9 @@ _BASE_CONF: dict[str, str] = {
     # is lost; puts/gets/eviction are untouched.
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
     "spark.ui.enabled": "false",
+    # Stage progress bars would crowd the bench's JSON line out of a
+    # captured stdout tail.
+    "spark.ui.showConsoleProgress": "false",
 }
 
 

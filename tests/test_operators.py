@@ -1175,9 +1175,39 @@ def test_bench_line_never_drops_query_rows():
     assert "truncated_to_slowest" not in parsed
     div = parsed.get("paired_median_divergent", {})
     assert len(div) <= STAMP_CAP
-    if div:
-        # the capped stamp advertises the full divergent count
-        assert parsed.get("paired_divergent_n", len(div)) == 30
+    # the full divergent count survives capping AND dropping the stamp
+    assert parsed["paired_divergent_n"] == 30
+
+
+def test_bench_line_warns_when_still_over_length(capsys):
+    """When even the stampless 1-decimal render exceeds the captured
+    tail, the line keeps every row but says so loudly on stderr
+    instead of being cut silently in the stdout tail."""
+    import json
+
+    from bench import MAX_LINE_CHARS, format_bench_line
+
+    short = {f"q{i:04d}_row": 9999.99 for i in range(400)}
+    line = format_bench_line(
+        short,
+        {"q0000_row": 1.0},
+        value=1.0,
+        setup=1.0,
+        all_in_wall=1.0,
+        sf=0.1,
+    )
+    assert len(line) > MAX_LINE_CHARS
+    parsed = json.loads(line)
+    assert set(parsed["queries"]) == set(short)
+    assert parsed["paired_divergent_n"] == 1
+    assert "paired_median_divergent" not in parsed
+    assert "WARNING" in capsys.readouterr().err
+
+    # a line that fits prints no warning
+    format_bench_line(
+        {"q1": 1.0}, {}, value=1.0, setup=1.0, all_in_wall=1.0, sf=0.1
+    )
+    assert capsys.readouterr().err == ""
 
 
 def test_never_gated_queries_sit_inside_gate_prefix():

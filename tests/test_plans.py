@@ -560,3 +560,14 @@ def test_session_skips_rocksdb_row_count_maintenance(spark):
     key = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
     assert _BASE_CONF[key] == "false"
     assert spark.conf.get(key) == "false"
+
+
+def test_session_hides_console_progress_bars(spark):
+    """Stage progress bars on stdout crowded the bench's JSON line out of
+    the ~2 KB captured stdout tail (BENCH_r13-r15); the session default
+    turns them off."""
+    from kafka_streams_learning_spark.session import _BASE_CONF
+
+    key = "spark.ui.showConsoleProgress"
+    assert _BASE_CONF[key] == "false"
+    assert spark.sparkContext.getConf().get(key) == "false"
