@@ -15,9 +15,11 @@ meaningful (a late row can be planted by assigning it to a later chunk).
 from __future__ import annotations
 
 import atexit
+import glob
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -124,15 +126,20 @@ _ORDERABLE = {
 
 def ranked_chunks(df: DataFrame, chunks: int, order_by: str) -> DataFrame:
     """`df` plus a `_chunk` column: event-time-ordered ntile, snapped so
-    every equal-`order_by` run shares the run's minimum chunk.
+    every equal-`order_by` run shares the run's minimum chunk, with rows
+    sorted by (`_chunk`, ranking order) in the single partition the
+    global windows leave.
 
     The snap window frames the current row's PEERS (rows equal on
     `order_by`): min(_chunk) over it is the run's first chunk. Its sort
     key is a prefix of the ntile window's, so Catalyst satisfies both
     Window operators with ONE global sort — a single Exchange, asserted
     by tests/test_plans.py (the earlier partitionBy(order_by) snap
-    hash-shuffled the whole table a second time)."""
-    tiebreak = [
+    hash-shuffled the whole table a second time). The closing local sort
+    is the one a write partitioned by `_chunk` needs anyway; keying it on
+    the full ranking order keeps each chunk's rows in ranking order
+    without relying on sort stability."""
+    order = [F.col(order_by)] + [
         F.col(f.name)
         for f in df.schema.fields
         if f.name != order_by and f.dataType.typeName().split("(")[0] in _ORDERABLE
@@ -141,10 +148,11 @@ def ranked_chunks(df: DataFrame, chunks: int, order_by: str) -> DataFrame:
         Window.orderBy(F.col(order_by))
         .rangeBetween(Window.currentRow, Window.currentRow)
     )
-    return df.withColumn(
-        "_chunk",
-        F.ntile(chunks).over(Window.orderBy(F.col(order_by), *tiebreak)),
-    ).withColumn("_chunk", F.min("_chunk").over(snap))
+    return (
+        df.withColumn("_chunk", F.ntile(chunks).over(Window.orderBy(*order)))
+        .withColumn("_chunk", F.min("_chunk").over(snap))
+        .sortWithinPartitions("_chunk", *order)
+    )
 
 
 def stage_replay_chunks(
@@ -153,8 +161,9 @@ def stage_replay_chunks(
     chunks: int,
     order_by: str,
 ) -> str:
-    """Materialize `df` into `chunks` single-file parquet chunks in
-    event-time order. Returns the directory to stream from.
+    """Materialize `df` into `chunks` single-file parquet chunks
+    (`chunk=00001` ... under `staging_dir`) in event-time order. Returns
+    the directory to stream from.
 
     The ntile ordering includes every remaining column as a tiebreaker:
     equal event times must land in a deterministic chunk, or order-
@@ -169,34 +178,57 @@ def stage_replay_chunks(
     symmetric tie counts, s09's strict as-of inequality) observe the run
     in fragments. Chunks stay near-equal-sized for high-resolution
     timestamps and may be uneven (or empty) when `order_by` is coarse —
-    correctness of replay order is the contract, not balance."""
-    ranked = ranked_chunks(df, chunks, order_by).persist()
-    # sort once; each chunk write filters the cached ranking
+    correctness of replay order is the contract, not balance. An empty
+    chunk still gets one 0-row data file, so every chunk is one trigger.
+
+    All chunks are written by ONE parquet write partitioned by `_chunk`
+    (one Spark job; AQE runs the ranking's shuffle as a job of its own).
+    The ranking is a single partition, so it writes one file per
+    non-empty chunk. The file source replays files in modification-time
+    order, so the data files get strictly increasing mtimes in chunk
+    order, 1 s apart, the last no later than staging's return: a file
+    appended afterwards (a `chunk=99999-extra` flush chunk) replays
+    last."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # `_`-prefixed: the file source skips it if a failed write leaves it
+    written = os.path.join(staging_dir, "_ranked")
     # Spark's default parquet timestamp encoding is the deprecated INT96,
     # which carries NO footer min/max statistics — write INT64 micros so
     # staged chunks keep column stats (staged_column_max depends on them).
-    # Scoped to the staging writes: the prior session value is restored so
-    # unrelated writes (bucketing, ktable snapshots) keep their default.
+    # Scoped to the staging write: the session's prior setting (or its
+    # absence) is restored, so unrelated writes keep their own encoding.
     conf = df.sparkSession.conf
     ts_key = "spark.sql.parquet.outputTimestampType"
-    prior_ts = conf.get(ts_key)
+    prior_ts = conf.get(ts_key, None)
     conf.set(ts_key, "TIMESTAMP_MICROS")
     try:
-        # chunks are written sequentially ON PURPOSE: the file stream
-        # source orders files by modification time, and increasing mtimes
-        # are what guarantee chunk k replays before chunk k+1
-        for i in range(1, chunks + 1):
-            chunk_dir = os.path.join(staging_dir, f"chunk={i:05d}")
-            (
-                ranked.filter(F.col("_chunk") == i)
-                .drop("_chunk")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(chunk_dir)
-            )
+        ranked = ranked_chunks(df, chunks, order_by)
+        ranked.write.partitionBy("_chunk").parquet(written)
     finally:
-        conf.set(ts_key, prior_ts)
-        ranked.unpersist()
+        if prior_ts is None:
+            conf.unset(ts_key)
+        else:
+            conf.set(ts_key, prior_ts)
+    data_files = []
+    for i in range(1, chunks + 1):
+        chunk_dir = os.path.join(staging_dir, f"chunk={i:05d}")
+        try:
+            os.rename(os.path.join(written, f"_chunk={i}"), chunk_dir)
+        except FileNotFoundError:  # a chunk with no rows gets no directory
+            os.makedirs(chunk_dir)
+            name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+            empty = to_arrow_schema(df.schema).empty_table()
+            pq.write_table(empty, os.path.join(chunk_dir, name))
+        data_files += sorted(glob.glob(os.path.join(chunk_dir, "part-*.parquet")))
+    shutil.rmtree(written)
+    # "now" as the filesystem's own clock reads it: a file written after
+    # staging returns gets an mtime at or after this one
+    now_ns = os.stat(staging_dir).st_mtime_ns
+    for k, path in enumerate(data_files):
+        mtime_ns = now_ns - (len(data_files) - 1 - k) * 1_000_000_000
+        os.utime(path, ns=(mtime_ns, mtime_ns))
     return staging_dir
 
 
@@ -224,8 +256,8 @@ ALL_STAGED_ONE_BATCH = -1
 
 def staged_data_file_count(staging_dir: str) -> int:
     """Count the parquet data files under a staging directory — the unit
-    `maxFilesPerTrigger` actually batches (one per chunk when staging
-    coalesce(1) holds, more if a chunk ever splits into part files)."""
+    `maxFilesPerTrigger` actually batches (one per chunk as staging
+    writes them, more if a chunk ever splits into part files)."""
     n = 0
     for _root, _dirs, files in os.walk(staging_dir):
         n += sum(
@@ -301,13 +333,14 @@ def shared_replay_table(
     """`replay_table`, but the staged chunks are cached per
     (sf_dir, table, chunks, order_by) for the life of the process.
 
-    Staging is a global sort plus one parquet write per chunk — the most
-    expensive part of replaying a small fixture — and the staged files are
-    immutable once written (queries that append flush-sentinel chunks use
-    a PRIVATE `replay_table` staging instead). Each query still gets its
-    own checkpoint dir, so the file-source offsets never collide; only the
-    input files are reused. A catalog/bench run that replays `events` for
-    six different streaming queries pays the sort once.
+    Staging is a global sort plus one parquet write partitioned by
+    chunk — the most expensive part of replaying a small fixture — and
+    the staged files are immutable once written (queries that append
+    flush-sentinel chunks use a PRIVATE `replay_table` staging instead).
+    Each query still gets its own checkpoint dir, so the file-source
+    offsets never collide; only the input files are reused. A
+    catalog/bench run that replays `events` for six different streaming
+    queries pays the sort once.
 
     `columns` projects the staged files to just those columns (must
     include `order_by`): a wide fact replayed by a query that reads four

@@ -57,12 +57,26 @@ def test_staged_column_max_rejects_string_stats(spark):
 
 def test_stage_replay_chunks_restores_timestamp_conf(spark):
     key = "spark.sql.parquet.outputTimestampType"
-    prior = spark.conf.get(key)
+    spark.conf.unset(key)
     df = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1))], "id long, ts timestamp"
     )
     stage_replay_chunks(df, run_staging_dir("conf"), chunks=1, order_by="ts")
-    assert spark.conf.get(key) == prior  # staging write no longer leaks
+    # unset again afterwards, not pinned to the default it reads back as
+    assert spark.conf.get(key, None) is None
+    # an explicit session setting survives staging, a failed one included
+    spark.conf.set(key, "INT96")
+    try:
+        stage_replay_chunks(df, run_staging_dir("conf"), chunks=1, order_by="ts")
+        assert spark.conf.get(key) == "INT96"
+        failing = df.withColumn("boom", F.raise_error(F.lit("boom")))
+        with pytest.raises(Exception, match="boom"):  # fails inside the write
+            stage_replay_chunks(
+                failing, run_staging_dir("conf"), chunks=1, order_by="ts"
+            )
+        assert spark.conf.get(key) == "INT96"
+    finally:
+        spark.conf.unset(key)
     # ...but the staged files themselves carried INT64 stats (the point
     # of the scoped override): footer max is readable
     d = run_staging_dir("conf2")
@@ -101,6 +115,117 @@ def test_stage_replay_chunks_never_splits_equal_ts_runs(spark):
         assert len(dirs) == 1, f"run {v} straddles chunks {dirs}"
     # all rows survived the snap
     assert sum(1 for _ in rows) == 12
+
+
+def _chunk_files(d: str) -> list[str]:
+    """The staging's data files in chunk order."""
+    return [
+        os.path.join(d, c, f)
+        for c in sorted(os.listdir(d))
+        for f in sorted(os.listdir(os.path.join(d, c)))
+        if f.startswith("part-") and f.endswith(".parquet")
+    ]
+
+
+def test_stage_replay_chunks_one_job_same_files(spark):
+    """Staging is one partitioned write, not a job per chunk: one Spark
+    job (with AQE off; AQE runs the window's shuffle as a job of its
+    own), nothing left persisted, one data file per chunk holding exactly
+    `ranked_chunks` filtered to that chunk in ranking order, and data-file
+    mtimes strictly increasing with the chunk number — the order the file
+    source replays them in."""
+    import pyarrow.parquet as pq
+
+    from kafka_streams_learning_spark.sources.replay import ranked_chunks
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (i, base + dt.timedelta(minutes=(i * 7) % 60), f"k{i % 3}")
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "id long, ts timestamp, key string")
+    chunks = 6
+    d = run_staging_dir("onejob")
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    aqe = "spark.sql.adaptive.enabled"
+    prior_aqe = spark.conf.get(aqe, None)
+    spark.conf.set(aqe, "false")
+    sc.setJobGroup("stage-onejob", "stage_replay_chunks")
+    try:
+        stage_replay_chunks(df, d, chunks=chunks, order_by="ts")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        if prior_aqe is None:
+            spark.conf.unset(aqe)
+        else:
+            spark.conf.set(aqe, prior_aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup("stage-onejob")) == 1
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+    assert sorted(os.listdir(d)) == [f"chunk={i:05d}" for i in range(1, chunks + 1)]
+    files = _chunk_files(d)
+    assert len(files) == chunks
+    ranked = ranked_chunks(df, chunks, "ts").collect()
+    for i, path in enumerate(files, start=1):
+        want = [tuple(r)[:-1] for r in ranked if r._chunk == i]
+        got = [tuple(r.values()) for r in pq.read_table(path).to_pylist()]
+        assert [(g[0], g[1].replace(tzinfo=None), g[2]) for g in got] == want
+    mtimes = [os.stat(f).st_mtime_ns for f in files]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+
+
+def test_stage_replay_chunks_keeps_empty_chunks(spark):
+    """A coarse `order_by` (3 distinct values, 8 chunks) leaves chunks
+    with no rows; each still gets exactly one 0-row data file, so the
+    replay keeps one trigger per chunk."""
+    import pyarrow.parquet as pq
+
+    from kafka_streams_learning_spark.sources.replay import (
+        staged_data_file_count,
+    )
+
+    rows = [(i, i % 3) for i in range(30)]
+    df = spark.createDataFrame(rows, "id long, grp int")
+    chunks = 8
+    d = run_staging_dir("empty")
+    stage_replay_chunks(df, d, chunks=chunks, order_by="grp")
+    files = _chunk_files(d)
+    assert [os.path.basename(os.path.dirname(f)) for f in files] == [
+        f"chunk={i:05d}" for i in range(1, chunks + 1)
+    ]
+    counts = [pq.read_metadata(f).num_rows for f in files]
+    assert sum(counts) == 30 and counts.count(0) == chunks - 3
+    assert staged_data_file_count(d) == chunks
+    # the 0-row files read back with the staged schema
+    assert spark.read.schema(df.schema).parquet(d).count() == 30
+
+
+def test_replay_order_follows_chunks_then_appended_files(spark):
+    """End to end through the file source: batch k replays chunk k, and a
+    file appended to the staging afterwards (a flush chunk) replays last —
+    the mtime contract staging writes for the file source."""
+    from kafka_streams_learning_spark.sources.replay import (
+        replay_stream,
+        stage_explicit_chunks,
+    )
+    from kafka_streams_learning_spark.streaming import runner
+
+    base = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(i, base + dt.timedelta(seconds=i)) for i in range(20)],
+        "id long, ts timestamp",
+    )
+    d = run_staging_dir("order")
+    stage_replay_chunks(df, d, chunks=5, order_by="ts")
+    stage_explicit_chunks(
+        spark, [[(99, base)]], "id long, ts timestamp", d + "/chunk=99999-extra"
+    )
+    batches = runner.run_collect_batches(
+        replay_stream(spark, d, df.schema), "append"
+    )
+    got = [sorted(r.id for r in b) for b in batches]
+    assert got == [list(range(k, k + 4)) for k in range(0, 20, 4)] + [[99]]
 
 
 def test_materialized_round_trip_and_tag_reuse(spark):
