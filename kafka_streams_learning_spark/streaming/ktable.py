@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_learning_spark.operators.joins import latest_per_key
+from kafka_streams_learning_spark.streaming import runner
 
 _MANIFEST = "_MANIFEST"
 _BUCKET_COL = "ksl_bucket"
@@ -206,21 +207,18 @@ def materialize_ktable(
     the `builder.table()` materialization pass. `expected_rows` sizes the
     adaptive bucket derivation for the FULL dimension (see
     `upsert_snapshot`: batch-1-only derivation undershoots on chunked
-    changelogs)."""
-    import tempfile
-
+    changelogs). The pass runs through `runner._run_to_completion`, so
+    it gets the same checkpoint handling and conf scoping as every
+    other run."""
     os.makedirs(snapshot_dir, exist_ok=True)
-    q = (
-        changelog.writeStream.outputMode("append")
-        .foreachBatch(
+    runner._run_to_completion(
+        changelog.sparkSession,
+        changelog.writeStream.outputMode("append").foreachBatch(
             lambda df, _epoch: upsert_snapshot(
                 df, snapshot_dir, key, version_col, num_buckets,
                 expected_rows=expected_rows,
             )
-        )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ksl-ktbl-"))
-        .start()
+        ),
+        runner._checkpoint(),
+        {},
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()

@@ -14,6 +14,7 @@
 from __future__ import annotations
 
 import math
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
@@ -107,24 +108,62 @@ def _state_partitions(
     return None
 
 
+# Spark's default checkpoint manager (FileContext-based) renames through
+# `AbstractFileSystem.renameInternal`, which on a local filesystem
+# without libhadoop forks a `readlink` process for each link-status
+# lookup — 16 per RocksDB store commit. The FileSystem-based manager
+# does the same POSIX rename (and check-then-rename) on a local FS
+# without those forks; Spark's checksum wrapper and Hadoop's `.crc`
+# sidecars still apply. Elsewhere (HDFS, object stores) the two
+# managers' overwrite semantics differ, so only local checkpoints switch.
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _is_local_path(spark: SparkSession, path: str) -> bool:
+    """True iff Hadoop resolves `path` to the local filesystem: a
+    `file:` URI, or a path without a scheme under a local (the default)
+    `fs.defaultFS`."""
+    scheme = urlparse(path).scheme
+    if not scheme:
+        default_fs = (
+            spark._jsparkSession.sessionState().newHadoopConf()
+            .get("fs.defaultFS", "file:///")
+        )
+        scheme = urlparse(default_fs).scheme
+    return scheme == "file"
+
+
 def _run_to_completion(
     spark: SparkSession,
     writer: DataStreamWriter,
+    checkpoint: str,
     overrides: dict[str, str | None],
 ) -> None:
-    """Start `writer`'s query, process all available input and stop it,
-    with the non-None `overrides` applied to the session for this run
-    only: every overridden key is restored afterwards — unset if the
-    session had not set it — exceptions included, so no run leaks conf
-    into the queries that follow (ADVICE r15). A stateful query's
-    shuffle partition count needs no session-wide pin: Spark records it
-    in the checkpoint's offset metadata and reuses it on restart."""
+    """Start `writer`'s query on `checkpoint`, process all available
+    input and stop it, with the non-None `overrides` applied to the
+    session for this run only: every overridden key is restored
+    afterwards — unset if the session had not set it — exceptions
+    included, so no run leaks conf into the queries that follow (ADVICE
+    r15). A stateful query's shuffle partition count needs no
+    session-wide pin: Spark records it in the checkpoint's offset
+    metadata and reuses it on restart.
+
+    This is the one place a run's checkpoint location is attached. A
+    local checkpoint also gets the FileSystem-based checkpoint manager
+    for this run (see `_LOCAL_CHECKPOINT_MANAGER`); any other URI keeps
+    the session's manager."""
     overrides = {k: v for k, v in overrides.items() if v is not None}
+    if _is_local_path(spark, checkpoint):
+        overrides[_CHECKPOINT_MANAGER_KEY] = _LOCAL_CHECKPOINT_MANAGER
     prior = {k: spark.conf.get(k, None) for k in overrides}
     try:
         for k, v in overrides.items():
             spark.conf.set(k, v)
-        q = writer.start()
+        q = writer.option("checkpointLocation", checkpoint).start()
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
@@ -170,6 +209,10 @@ def run_to_memory(
 
     `state_partitions` and `arrow_batch_rows` hold for this run only;
     the session's prior values are restored afterwards.
+    `_run_to_completion` attaches the checkpoint (`checkpoint`, or a
+    fresh directory removed at interpreter exit); a local one commits
+    through the FileSystem-based checkpoint manager, without the
+    `readlink` forks of Spark's default.
 
     `arrow_batch_rows`: per-query override of
     `spark.sql.execution.arrow.maxRecordsPerBatch`. applyInPandasWithState
@@ -205,8 +248,8 @@ def run_to_memory(
         spark,
         df.writeStream.outputMode(output_mode)
         .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt),
+        .queryName(name),
+        ckpt,
         {
             "spark.sql.shuffle.partitions": _state_partitions(
                 spark, state_partitions
@@ -233,9 +276,8 @@ def run_collect_batches(
     spark = df.sparkSession
     _run_to_completion(
         spark,
-        df.writeStream.outputMode(output_mode)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint or _checkpoint()),
+        df.writeStream.outputMode(output_mode).foreachBatch(_sink),
+        checkpoint or _checkpoint(),
         {"spark.sql.shuffle.partitions": _state_partitions(spark)},
     )
     return batches

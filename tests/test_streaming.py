@@ -788,18 +788,23 @@ def test_arrow_batch_override_unsets_when_previously_unset(spark, tmpdir):
 
 
 def test_run_conf_is_scoped_and_pinned_in_checkpoint(spark, tmpdir):
-    """run_to_memory and run_collect_batches apply their shuffle-partition
-    and Arrow batch-size settings for one run only (ADVICE r15): the
-    session conf is the same before and after every run — a failing run
-    included, and a key the session never set is unset again — while the
-    checkpoint's offset metadata records the partition count the stateful
-    query ran with (`ksl.state.partitions`, which beats every other
-    sizing), so a restart keeps it."""
+    """run_to_memory and run_collect_batches apply their shuffle-partition,
+    Arrow batch-size and checkpoint-manager settings for one run only
+    (ADVICE r15): the session conf is the same before and after every
+    run — a failing run included, and a key the session never set is
+    unset again — while the checkpoint's offset metadata records the
+    partition count the stateful query ran with (`ksl.state.partitions`,
+    which beats every other sizing), so a restart keeps it."""
     import json
     import os
 
     shuffle = "spark.sql.shuffle.partitions"
     arrow = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    file_context = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
     base = ts("2024-01-01T00:00:00")
     stage_explicit_chunks(
         spark, [[("a", 1, 10.0, base), ("b", 2, 10.0, base)]],
@@ -815,7 +820,7 @@ def test_run_conf_is_scoped_and_pinned_in_checkpoint(spark, tmpdir):
         return stream.select(F.expr("assert_true(amount < 0)").alias("x"))
 
     def session_conf():
-        return spark.conf.get(shuffle, None), spark.conf.get(arrow, None)
+        return tuple(spark.conf.get(k, None) for k in (shuffle, arrow, manager))
 
     def checkpoint_partitions(ckpt):
         with open(os.path.join(ckpt, "offsets", "0")) as fh:
@@ -823,16 +828,20 @@ def test_run_conf_is_scoped_and_pinned_in_checkpoint(spark, tmpdir):
         return meta["conf"][shuffle]
 
     prior_arrow = spark.conf.get(arrow, None)
+    assert spark.conf.get(manager, None) is None
     spark.conf.set("ksl.state.partitions", "7")
     try:
-        # the Arrow key unset (the override must be unset again), then set
-        for arrow_prior in (None, "777"):
-            if arrow_prior is None:
-                spark.conf.unset(arrow)
-            else:
-                spark.conf.set(arrow, arrow_prior)
+        # the Arrow and manager keys unset (the overrides must be unset
+        # again), then set
+        for arrow_prior, manager_prior in ((None, None), ("777", file_context)):
+            for k, v in ((arrow, arrow_prior), (manager, manager_prior)):
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
             before = session_conf()
-            assert before[1] == arrow_prior and before[0] != "7"
+            assert before[1:] == (arrow_prior, manager_prior)
+            assert before[0] != "7"
 
             ckpt = f"{tmpdir}/mem-{arrow_prior}"
             runner.run_to_memory(
@@ -865,10 +874,121 @@ def test_run_conf_is_scoped_and_pinned_in_checkpoint(spark, tmpdir):
             assert session_conf() == before
     finally:
         spark.conf.unset("ksl.state.partitions")
+        spark.conf.unset(manager)
         if prior_arrow is None:
             spark.conf.unset(arrow)
         else:
             spark.conf.set(arrow, prior_arrow)
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmpdir):
+    """`_run_to_completion` attaches the checkpoint and, for a local one
+    (a plain path, a `file:` URI, a scheme-less path under the default
+    local `fs.defaultFS`), sets the FileSystem-based checkpoint manager
+    for the run; an `hdfs://` URI, or a scheme-less path when the
+    default filesystem is not local, sees the session's value. The
+    session conf is restored after every run."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    local = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    seen = []
+
+    class FakeQuery:
+        def processAllAvailable(self):
+            pass
+
+        def stop(self):
+            pass
+
+        def awaitTermination(self):
+            pass
+
+    class FakeWriter:
+        def option(self, k, v):
+            self.opts = {k: v}
+            return self
+
+        def start(self):
+            seen.append((self.opts, spark.conf.get(key, None)))
+            return FakeQuery()
+
+    def manager_at_start(ckpt):
+        seen.clear()
+        runner._run_to_completion(spark, FakeWriter(), ckpt, {})
+        ((opts, manager),) = seen
+        assert opts == {"checkpointLocation": ckpt}
+        return manager
+
+    assert spark.conf.get(key, None) is None
+    assert manager_at_start(f"{tmpdir}/ckpt") == local
+    assert manager_at_start(f"file://{tmpdir}/ckpt") == local
+    assert manager_at_start("hdfs://namenode:8020/ckpt") is None
+    assert spark.conf.get(key, None) is None
+    try:
+        spark.conf.set(key, "session.Manager")
+        assert manager_at_start("hdfs://namenode:8020/ckpt") == "session.Manager"
+        assert manager_at_start(f"{tmpdir}/ckpt") == local
+        assert spark.conf.get(key) == "session.Manager"
+        spark.conf.set("fs.defaultFS", "hdfs://namenode:8020")
+        assert manager_at_start("/ckpt") == "session.Manager"
+        assert manager_at_start(f"file://{tmpdir}/ckpt") == local
+    finally:
+        spark.conf.unset(key)
+        spark.conf.unset("fs.defaultFS")
+
+
+def test_local_checkpoint_keeps_integrity_files_and_restarts(spark, tmpdir):
+    """A stateful run on a local checkpoint commits through the
+    FileSystem-based manager and still leaves every integrity file: the
+    RocksDB changelog, Spark's checksum file beside it, Hadoop's `.crc`
+    sidecars of both, `.crc` sidecars on the offset and commit logs, and
+    no temp file. A restart from that checkpoint reaches the same result
+    as one uninterrupted run."""
+    import os
+
+    base = ts("2024-01-01T00:00:00")
+    data_dir = f"{tmpdir}/data"
+    ckpt = f"{tmpdir}/ckpt"
+    stage_explicit_chunks(
+        spark,
+        [[("a", 1, 10.0, base), ("b", 2, 10.0, base)], [("a", 3, 10.0, base)]],
+        EVENTS_SCHEMA, data_dir,
+    )
+
+    def counted():
+        return replay_stream(spark, data_dir, EVENTS_SCHEMA).groupBy("key").count()
+
+    runner.run_collect_batches(counted(), "complete", checkpoint=ckpt)
+    files = {
+        os.path.relpath(os.path.join(root, f), ckpt)
+        for root, _dirs, names in os.walk(ckpt)
+        for f in names
+    }
+    assert not [f for f in files if f.endswith(".tmp") or ".tmp." in f]
+    for log in ("offsets", "commits"):
+        assert {f"{log}/0", f"{log}/.0.crc", f"{log}/1", f"{log}/.1.crc"} <= files
+    store_dirs = {os.path.dirname(f) for f in files if f.endswith(".changelog")}
+    assert store_dirs
+    for d in store_dirs:
+        for v in (1, 2):
+            assert {
+                f"{d}/{v}.changelog",
+                f"{d}/{v}.changelog.crc",
+                f"{d}/.{v}.changelog.crc",
+                f"{d}/.{v}.changelog.crc.crc",
+            } <= files, d
+
+    stage_explicit_chunks(
+        spark, [[("b", 4, 10.0, base), ("c", 5, 10.0, base)]],
+        EVENTS_SCHEMA, data_dir + "/chunk=99999-extra",
+    )
+    resumed = runner.run_collect_batches(counted(), "complete", checkpoint=ckpt)
+    control = runner.run_collect_batches(counted(), "complete")
+    assert len(resumed) == 1  # only the appended chunk was replayed
+    assert sorted(map(tuple, resumed[-1])) == sorted(map(tuple, control[-1]))
+    assert sorted(map(tuple, control[-1])) == [("a", 2), ("b", 2), ("c", 1)]
 
 
 def test_hopping_append_and_late_drop(spark, tmpdir):
