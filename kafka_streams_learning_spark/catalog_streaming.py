@@ -37,12 +37,15 @@ from kafka_streams_learning_spark.streaming import runner, stateful, windows
 REPLAY_CHUNKS = 2
 # State-store shards for the catalog's streaming queries. Every shard is a
 # live RocksDB instance paying an open+commit per micro-batch, so shard
-# count is sized to STATE VOLUME (~10-100 MB per shard is the sweet spot),
-# not to cores: the fixture state at sf<=0.1 is tens of MB, so 8 shards —
-# measured 1.7x faster than the 32-shard default on the interval join with
-# identical results. Passed as `state_partitions`, it overrides the
-# session's spark.sql.shuffle.partitions for the run; only a
-# ksl.state.partitions pin beats it, so a 100 TB deployment sets that
+# count is sized to STATE VOLUME (~10-100 MB per shard is the sweet spot):
+# the fixture state at sf<=0.1 is tens of MB, so 8 shards — measured 1.7x
+# faster than the 32-shard default on the interval join with identical
+# results. The run then caps that count at the cores that run it
+# (defaultParallelism): each shard is one task per trigger, so 8 shards on
+# 4 cores run every micro-batch in two waves. Passed as
+# `state_partitions`, the capped count overrides the session's
+# spark.sql.shuffle.partitions for the run; only a ksl.state.partitions
+# pin beats it (uncapped), so a 100 TB deployment sets that
 # (streaming/runner._state_partitions).
 STATE_SHARDS = 8
 ALERT_VALUE_THRESHOLD = 100.0  # events.value gate for s03 (~20% qualify)

@@ -85,14 +85,19 @@ def _state_partitions(
     parallelism one — every shard is a live state-store instance (a
     RocksDB open + commit per micro-batch), so over-sharding small state
     buys pure fixed cost. Target ~10-100 MB of state per shard, floored
-    at enough shards to spread hot keys. A user pin via
-    `ksl.state.partitions` still beats it."""
+    at enough shards to spread hot keys. The run caps that volume-sized
+    count at defaultParallelism: each partition is one task per trigger,
+    so partitions beyond the cores that run them add a second wave of
+    tasks to every micro-batch (8 on 4 cores: keyed perfbench wall
+    −20%, BENCH_NOTES "State partitions capped at cores"). The cap only
+    lowers a count, never raises one. A user pin via
+    `ksl.state.partitions` beats both and is never capped."""
     key = "spark.sql.shuffle.partitions"
     pinned = spark.conf.get("ksl.state.partitions", None)
     if pinned is not None:
         return pinned  # explicit engine-level opt-out
     if state_partitions is not None:
-        return str(state_partitions)
+        return str(min(state_partitions, spark.sparkContext.defaultParallelism))
     if spark.sparkContext.getConf().contains(key):
         return None  # explicitly configured at session build — respect it
     if spark.conf.get(key) == _SPARK_DEFAULT_SHUFFLE_PARTITIONS:
@@ -207,8 +212,11 @@ def run_to_memory(
     the operator drops it) gets a logged warning — the caller then pins
     the checkpoint with `stateful.pin_shard_count` (ADVICE r12).
 
-    `state_partitions` and `arrow_batch_rows` hold for this run only;
-    the session's prior values are restored afterwards.
+    `state_partitions` is the caller's volume-sized state partition
+    count; the run caps it at defaultParallelism (a `ksl.state.partitions`
+    pin wins uncapped, see `_state_partitions`). It and
+    `arrow_batch_rows` hold for this run only; the session's prior values
+    are restored afterwards.
     `_run_to_completion` attaches the checkpoint (`checkpoint`, or a
     fresh directory removed at interpreter exit); a local one commits
     through the FileSystem-based checkpoint manager, without the

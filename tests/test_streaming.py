@@ -32,6 +32,17 @@ def tmpdir():
 EVENTS_SCHEMA = "key string, record_id long, amount double, ts timestamp"
 
 
+def checkpoint_partitions(ckpt: str) -> str:
+    """The shuffle (state) partition count Spark recorded in the first
+    batch's offset metadata — the count every restart reuses."""
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    return meta["conf"]["spark.sql.shuffle.partitions"]
+
+
 def test_update_mode_emission_sequence(spark, tmpdir):
     """A1: running count per key emits an updated row per input batch
     (KTable changelog semantics, `StreamsOrderCount.java:130-134`)."""
@@ -738,9 +749,6 @@ def test_state_partitions_opt_out_conf_pins_value(spark, tmpdir):
     reused context): it is consulted first and always wins — over the
     caller's `state_partitions` too — and is the partition count the
     stateful query runs with, recorded in its checkpoint."""
-    import json
-    import os
-
     shuffle = "spark.sql.shuffle.partitions"
     base = ts("2024-01-01T00:00:00")
     stage_explicit_chunks(
@@ -755,13 +763,80 @@ def test_state_partitions_opt_out_conf_pins_value(spark, tmpdir):
             stream.groupBy("key").count(), "opt_out_pin", "complete",
             checkpoint=ckpt, state_partitions=4,
         )
-        with open(os.path.join(ckpt, "offsets", "0")) as fh:
-            meta = json.loads(fh.read().splitlines()[1])
-        assert meta["conf"][shuffle] == "7"
+        assert checkpoint_partitions(ckpt) == "7"
         assert spark.conf.get(shuffle) == prev
     finally:
         spark.conf.unset("ksl.state.partitions")
         spark.conf.set(shuffle, prev)
+
+
+def test_caller_state_partitions_capped_at_cores(spark, tmpdir):
+    """A caller's volume-sized `state_partitions` is capped at
+    defaultParallelism: on the local[4] session, 8 asked-for partitions
+    run (and are recorded in the checkpoint) as 4 — whatever the
+    session's own shuffle setting — while a `ksl.state.partitions` pin
+    is never capped. The session conf is the same before and after
+    every run."""
+    shuffle = "spark.sql.shuffle.partitions"
+    assert spark.sparkContext.defaultParallelism == 4
+    base = ts("2024-01-01T00:00:00")
+    stage_explicit_chunks(
+        spark, [[("a", 1, 10.0, base), ("b", 2, 10.0, base)]],
+        EVENTS_SCHEMA, f"{tmpdir}/in",
+    )
+
+    def session_conf():
+        return tuple(
+            spark.conf.get(k, None) for k in (shuffle, "ksl.state.partitions")
+        )
+
+    def run(tag):
+        stream = replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA)
+        ckpt = f"{tmpdir}/ckpt-{tag}"
+        before = session_conf()
+        runner.run_to_memory(
+            stream.groupBy("key").count(), f"capped_{tag}", "complete",
+            checkpoint=ckpt, state_partitions=8,
+        )
+        assert session_conf() == before
+        got = spark.table(f"capped_{tag}").collect()
+        assert sorted(map(tuple, got)) == [("a", 1), ("b", 1)]
+        return checkpoint_partitions(ckpt)
+
+    prev = spark.conf.get(shuffle)
+    try:
+        assert run("session") == "4"
+        # the caller's sizing replaces the session's count, then is capped
+        spark.conf.set(shuffle, "3")
+        assert run("session3") == "4"
+        spark.conf.set("ksl.state.partitions", "7")
+        assert run("pinned") == "7"
+    finally:
+        spark.conf.unset("ksl.state.partitions")
+        spark.conf.set(shuffle, prev)
+
+
+def test_state_partitions_cap_never_raises_a_count():
+    """Spark-free: the cap is min(caller's count, defaultParallelism). A
+    32-core host keeps the catalog's 8; a count above the cores drops to
+    them; a `ksl.state.partitions` pin passes through as it is."""
+    from types import SimpleNamespace
+
+    def session(cores, pin=None):
+        conf = {} if pin is None else {"ksl.state.partitions": pin}
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d)),
+            sparkContext=SimpleNamespace(defaultParallelism=cores),
+        )
+
+    assert runner._state_partitions(session(32), 8) == "8"
+    assert runner._state_partitions(session(4), 8) == "4"
+    assert runner._state_partitions(session(4, pin="64"), 8) == "64"
+    for cores in (1, 4, 32):
+        for asked in range(1, 40):
+            assert runner._state_partitions(session(cores), asked) == str(
+                min(asked, cores)
+            )
 
 
 def test_arrow_batch_override_unsets_when_previously_unset(spark, tmpdir):
@@ -795,9 +870,6 @@ def test_run_conf_is_scoped_and_pinned_in_checkpoint(spark, tmpdir):
     unset again — while the checkpoint's offset metadata records the
     partition count the stateful query ran with (`ksl.state.partitions`,
     which beats every other sizing), so a restart keeps it."""
-    import json
-    import os
-
     shuffle = "spark.sql.shuffle.partitions"
     arrow = "spark.sql.execution.arrow.maxRecordsPerBatch"
     manager = "spark.sql.streaming.checkpointFileManagerClass"
@@ -821,11 +893,6 @@ def test_run_conf_is_scoped_and_pinned_in_checkpoint(spark, tmpdir):
 
     def session_conf():
         return tuple(spark.conf.get(k, None) for k in (shuffle, arrow, manager))
-
-    def checkpoint_partitions(ckpt):
-        with open(os.path.join(ckpt, "offsets", "0")) as fh:
-            meta = json.loads(fh.read().splitlines()[1])
-        return meta["conf"][shuffle]
 
     prior_arrow = spark.conf.get(arrow, None)
     assert spark.conf.get(manager, None) is None
@@ -1757,11 +1824,12 @@ def test_derive_state_shards_formula():
 
 
 def test_interval_join_shards_stay_floored_at_gate_scales():
-    """The driver benches at sf<=0.1: the derivation must keep the
-    historical 8 shards there (state is tens of MB — the measured flat
-    bottom), so gate hashes, plans, and cross-round bench comparability
-    are untouched; growth beyond the floor is for genuinely big state
-    (sf1 probe, OPTIMIZATION_r15.md)."""
+    """The driver benches at sf<=0.1: the volume derivation must keep
+    8 shards there (state is tens of MB — the measured flat bottom);
+    growth beyond the floor is for genuinely big state (sf1 probe,
+    OPTIMIZATION_r15.md). This is the count s04/s23 ask for: the run
+    caps it at the cores that run it (`runner._state_partitions`), so a
+    4-core host runs 4 and a 32-core host keeps 8."""
     from kafka_streams_learning_spark.catalog_streaming import (
         STATE_SHARDS,
         _interval_join_shards,
@@ -1769,3 +1837,88 @@ def test_interval_join_shards_stay_floored_at_gate_scales():
 
     for sf in ("sf0.001", "sf0.01", "sf0.1"):
         assert _interval_join_shards(f"/root/testdata/{sf}") == STATE_SHARDS
+
+
+@pytest.mark.parametrize(
+    "row", ["s04", "s23", "s12", "s20"],
+)
+def test_catalog_rows_drop_no_rows_by_watermark(spark, monkeypatch, row):
+    """The watermark-drop contract the catalog states in prose: the
+    coalesced interval joins (s04/s23) replay all input in one data
+    batch, so the watermark is still unset when every row arrives, and
+    the disorder of s12/s20 stays inside their 13 h bound — so no state
+    operator of these rows drops a row as late. Read from the runs' own
+    progress records, at whatever state partition count this host's
+    cores give them."""
+    import json
+    import os
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from kafka_streams_learning_spark.catalog import all_queries
+
+    from .conftest import SF_DIR
+
+    class Progress(StreamingQueryListener):
+        """Every progress record, per query run; Spark delivers them
+        asynchronously, so a caller waits for them by count."""
+
+        def __init__(self):
+            self.started: set[str] = set()
+            self.records: list[dict] = []
+            self._cv = threading.Condition()
+
+        def onQueryStarted(self, event):
+            with self._cv:
+                self.started.add(str(event.runId))
+
+        def onQueryProgress(self, event):
+            rec = json.loads(event.progress.json)
+            with self._cv:
+                if rec["runId"] in self.started:
+                    self.records.append(rec)
+                    self._cv.notify_all()
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+        def wait(self, batches: int, timeout: float = 30.0) -> list[dict]:
+            def ready():
+                seen = {(p["runId"], p["batchId"]) for p in self.records}
+                return len(seen) >= batches
+
+            with self._cv:
+                if not self._cv.wait_for(ready, timeout):
+                    raise RuntimeError("streaming progress was not delivered")
+                return list(self.records)
+
+    checkpoints = []
+    fresh = runner._checkpoint
+
+    def recorded_checkpoint():
+        checkpoints.append(fresh())
+        return checkpoints[-1]
+
+    monkeypatch.setattr(runner, "_checkpoint", recorded_checkpoint)
+    (spec,) = [q for q in all_queries() if q.name.startswith(row + "_")]
+    progress = Progress()
+    spark.streams.addListener(progress)
+    try:
+        spec.spark(spark, SF_DIR).count()
+        # one commit file per executed batch, one progress record each
+        batches = sum(
+            name.isdigit()
+            for ckpt in checkpoints
+            for name in os.listdir(os.path.join(ckpt, "commits"))
+        )
+        assert batches > 0
+        records = progress.wait(batches)
+    finally:
+        spark.streams.removeListener(progress)
+    operators = [op for p in records for op in p["stateOperators"]]
+    assert operators, f"{row}: no progress record carries a state operator"
+    assert sum(op["numRowsDroppedByWatermark"] for op in operators) == 0

@@ -15,7 +15,10 @@ variants:
              no-data batch still fires the outer NULL emissions)
   rocksdb    RocksDB state store provider instead of the default
              HDFS-backed in-memory-map provider
-  shards=K   state-store partition count sweep
+  shards=K   state-store partition count sweep, pinned through
+             `ksl.state.partitions` (the one sizing the run never caps at
+             the host's cores), with the count each run actually used —
+             read back from its checkpoint's offsets/0 — in the result
 
 Each variant runs R repetitions; every run's result is reduced to
 (row_count, order-insensitive value hash) and compared against the
@@ -29,11 +32,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -52,10 +56,27 @@ def result_hash(df) -> tuple[int, str]:
     return len(rows), h.hexdigest()
 
 
+def run_pinned(spark, df, name: str, shards: int) -> int:
+    """Run `df` into the memory table `name` with `shards` state
+    partitions pinned for this run only; returns the count Spark
+    recorded in the checkpoint."""
+    from kafka_streams_learning_spark.streaming import runner
+
+    ckpt = runner._checkpoint()
+    spark.conf.set("ksl.state.partitions", str(shards))
+    try:
+        runner.run_to_memory(df, name, "append", checkpoint=ckpt)
+    finally:
+        spark.conf.unset("ksl.state.partitions")
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
 def run_s04(spark, sf, fpt: int, shards: int):
     from kafka_streams_learning_spark.catalog_streaming import REPLAY_CHUNKS
     from kafka_streams_learning_spark.sources.replay import shared_replay_table
-    from kafka_streams_learning_spark.streaming import runner, windows
+    from kafka_streams_learning_spark.streaming import windows
 
     orders = shared_replay_table(
         spark, sf, "orders", REPLAY_CHUNKS, order_by="o_orderdate",
@@ -81,14 +102,14 @@ def run_s04(spark, sf, fpt: int, shards: int):
         "o_orderkey", "o_custkey", "l_linenumber", "l_extendedprice", "l_shipdate"
     )
     name = f"probe_s04_{int(time.time() * 1000)}"
-    runner.run_to_memory(j, name, "append", state_partitions=shards)
-    return spark.table(name)
+    used = run_pinned(spark, j, name, shards)
+    return spark.table(name), used
 
 
 def run_s23(spark, sf, fpt: int, shards: int):
     from kafka_streams_learning_spark.catalog_streaming import _s23_staging
     from kafka_streams_learning_spark.sources.replay import replay_stream
-    from kafka_streams_learning_spark.streaming import runner, windows
+    from kafka_streams_learning_spark.streaming import windows
 
     o_stage, l_stage, o_schema, l_schema = _s23_staging(spark, sf)
     j = windows.streaming_interval_join(
@@ -100,8 +121,8 @@ def run_s23(spark, sf, fpt: int, shards: int):
         "o_orderkey", "o_custkey", "l_linenumber", "l_extendedprice", "l_shipdate"
     )
     name = f"probe_s23_{int(time.time() * 1000)}"
-    runner.run_to_memory(j, name, "append", state_partitions=shards)
-    return spark.table(name).filter(F.col("o_orderkey") >= 0)
+    used = run_pinned(spark, j, name, shards)
+    return spark.table(name).filter(F.col("o_orderkey") >= 0), used
 
 
 ROCKS = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -154,13 +175,15 @@ def main() -> int:
         row = {"variant": label, "fpt": fpt, "shards": shards,
                "provider": provider.rsplit(".", 1)[-1]}
         for qname, fn in (("s04", run_s04), ("s23", run_s23)):
-            times, sigs = [], []
+            times, sigs, used = [], [], set()
             for _ in range(reps):
                 t0 = time.time()
-                out = fn(spark, sf, fpt, shards)
+                out, shards_used = fn(spark, sf, fpt, shards)
                 sig = result_hash(out)
                 times.append(round(time.time() - t0, 3))
                 sigs.append(sig)
+                used.add(shards_used)
+            row[qname + "_shards_used"] = sorted(used)
             if len(set(sigs)) != 1:
                 row[qname + "_parity"] = "NONDETERMINISTIC " + repr(sigs)
             elif qname not in baseline_sig:
