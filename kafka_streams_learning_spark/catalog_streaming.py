@@ -33,21 +33,13 @@ from kafka_streams_learning_spark.sources.replay import (
     shared_replay_table,
 )
 from kafka_streams_learning_spark.streaming import runner, stateful, windows
+# the runner sizes every run; re-exported for callers that pass it
+# explicitly (perfbench's keyed run)
+from kafka_streams_learning_spark.streaming.runner import (  # noqa: F401
+    STATE_SHARDS,
+)
 
 REPLAY_CHUNKS = 2
-# State-store shards for the catalog's streaming queries. Every shard is a
-# live RocksDB instance paying an open+commit per micro-batch, so shard
-# count is sized to STATE VOLUME (~10-100 MB per shard is the sweet spot):
-# the fixture state at sf<=0.1 is tens of MB, so 8 shards — measured 1.7x
-# faster than the 32-shard default on the interval join with identical
-# results. The run then caps that count at the cores that run it
-# (defaultParallelism): each shard is one task per trigger, so 8 shards on
-# 4 cores run every micro-batch in two waves. Passed as
-# `state_partitions`, the capped count overrides the session's
-# spark.sql.shuffle.partitions for the run; only a ksl.state.partitions
-# pin beats it (uncapped), so a 100 TB deployment sets that
-# (streaming/runner._state_partitions).
-STATE_SHARDS = 8
 ALERT_VALUE_THRESHOLD = 100.0  # events.value gate for s03 (~20% qualify)
 ALERT_AFTER = 3
 
@@ -133,9 +125,7 @@ def _interval_join_state_bytes(sf: str) -> int:
 
 
 def _interval_join_shards(sf: str) -> int:
-    return runner.derive_state_shards(
-        _interval_join_state_bytes(sf), floor=STATE_SHARDS
-    )
+    return runner.derive_state_shards(_interval_join_state_bytes(sf))
 
 
 # s01 — running count per key, streamed (A1 via the streaming engine)
@@ -145,7 +135,7 @@ def _s01(spark: SparkSession, sf: str) -> DataFrame:
     stream = shared_replay_table(spark, sf, "events", REPLAY_CHUNKS)
     counted = windows.streaming_count_by_key(stream, "user_id", count_name="cnt")
     name = _fresh_name("s01_out")
-    runner.run_to_memory(counted, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "complete")
     return spark.table(name)
 
 
@@ -158,7 +148,7 @@ def _s02(spark: SparkSession, sf: str) -> DataFrame:
     stream = shared_replay_table(spark, sf, "events", REPLAY_CHUNKS)
     counted = windows.streaming_tumbling_count(stream, "ts", "1 day", "user_id")
     name = _fresh_name("s02_out")
-    runner.run_to_memory(counted, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "complete")
     return spark.table(name)
 
 
@@ -188,7 +178,7 @@ def _s03(spark: SparkSession, sf: str) -> DataFrame:
         stream, "key", ALERT_VALUE_THRESHOLD, ALERT_AFTER, impl="sharded"
     )
     name = _fresh_name("s03_out")
-    runner.run_to_memory(alerts, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(alerts, name, "append")
     return spark.table(name).select("key", "record_id", "amount", "running_cnt")
 
 
@@ -353,7 +343,7 @@ def _s05(spark: SparkSession, sf: str) -> DataFrame:
         "c_name", "c_mktsegment", "c_acctbal",
     )
     name = _fresh_name("s05_out")
-    runner.run_to_memory(joined, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(joined, name, "append")
     return spark.table(name)
 
 
@@ -379,8 +369,7 @@ def _s06(spark: SparkSession, sf: str) -> DataFrame:
     name = _fresh_name("s06_out")
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(counted, name, "append", arrow_batch_rows=500_000)
     return spark.table(name)
 
 
@@ -461,7 +450,7 @@ def _s07(spark: SparkSession, sf: str) -> DataFrame:
     stream = replay_stream(spark, staging, schema)
     counted = windows.streaming_session_count(stream, "ts", SESSION_GAP_S07, "user_id")
     name = _fresh_name("s07_out")
-    runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "append")
     return spark.table(name).filter(F.col("user_id") >= 0)
 
 
@@ -511,7 +500,7 @@ def _s08(spark: SparkSession, sf: str) -> DataFrame:
     )
     groups = s08_dedup_groups(stream)
     name = _fresh_name("s08_out")
-    runner.run_to_memory(groups, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(groups, name, "complete")
     return spark.table(name)
 
 
@@ -539,8 +528,7 @@ def _s09(spark: SparkSession, sf: str) -> DataFrame:
     name = _fresh_name("s09_out")
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(enriched, name, "append", state_partitions=STATE_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(enriched, name, "append", arrow_batch_rows=500_000)
     return spark.table(name)
 
 
@@ -561,7 +549,7 @@ def _s10(spark: SparkSession, sf: str) -> DataFrame:
         stream, "ts", "2 days", "1 day", "user_id"
     )
     name = _fresh_name("s10_out")
-    runner.run_to_memory(counted, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counted, name, "complete")
     return spark.table(name)
 
 
@@ -594,7 +582,7 @@ def _s11(spark: SparkSession, sf: str) -> DataFrame:
         stream, "o_totalprice", QUANTILES, "o_orderpriority"
     )
     name = _fresh_name("s11_out")
-    runner.run_to_memory(stats, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(stats, name, "complete")
     return spark.table(name)
 
 
@@ -625,7 +613,7 @@ def _s13(spark: SparkSession, sf: str) -> DataFrame:
     )
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     name = _fresh_name("s13_out")
-    runner.run_to_memory(counts, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counts, name, "complete")
     return (
         spark.table(name)
         .orderBy(F.col("cnt").desc(), F.col("token"))
@@ -654,7 +642,7 @@ def _s14(spark: SparkSession, sf: str) -> DataFrame:
         F.upper(F.col("event_type")).alias("event_type_upper"),
     )
     name = _fresh_name("s14_out")
-    runner.run_to_memory(mapped, name, "append", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(mapped, name, "append")
     return spark.table(name)
 
 
@@ -734,8 +722,7 @@ def _s12(spark: SparkSession, sf: str) -> DataFrame:
     name = _fresh_name("s12_out")
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(enriched, name, "append", state_partitions=STATE_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(enriched, name, "append", arrow_batch_rows=500_000)
     return spark.table(name)
 
 
@@ -781,7 +768,7 @@ def _s15(spark: SparkSession, sf: str) -> DataFrame:
     )
     groups = s15_neardup_groups(stream)
     name = _fresh_name("s15_out")
-    runner.run_to_memory(groups, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(groups, name, "complete")
     return spark.table(name)
 
 
@@ -851,7 +838,7 @@ def _s16(spark: SparkSession, sf: str) -> DataFrame:
     # stream's final state hash-equal to x43's oracle
     scored = score_tokens(tok, vocab_q, F.lit(unk))
     name = _fresh_name("s16_out")
-    runner.run_to_memory(scored, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(scored, name, "complete")
     return spark.table(name)
 
 
@@ -886,7 +873,7 @@ def _s17(spark: SparkSession, sf: str) -> DataFrame:
     )
     regs = hll_registers(tok, "token", ["source"])
     name = _fresh_name("s17_out")
-    runner.run_to_memory(regs, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(regs, name, "complete")
     return hll_estimate(spark.table(name), ["source"])
 
 
@@ -925,7 +912,7 @@ def _s18(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     name = _fresh_name("s18_out")
-    runner.run_to_memory(counters, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(counters, name, "complete")
 
     # the query set (exact top-k with counts) comes from the BATCH table —
     # the x58 calibration contract; estimates probe the final stream state
@@ -997,7 +984,7 @@ def _s19(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     name = _fresh_name("s19_out")
-    runner.run_to_memory(hist, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(hist, name, "complete")
 
     # collapse the FINAL counter state exactly as x60 does (shared code)
     from kafka_streams_learning_spark.operators.sketches import (
@@ -1088,8 +1075,7 @@ def _s20(spark: SparkSession, sf: str) -> DataFrame:
     name = _fresh_name("s20_out")
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
-    runner.run_to_memory(counted, name, "append", state_partitions=STATE_SHARDS,
-                         arrow_batch_rows=500_000)
+    runner.run_to_memory(counted, name, "append", arrow_batch_rows=500_000)
     return spark.table(name)
 
 
@@ -1155,7 +1141,7 @@ def _s21(spark: SparkSession, sf: str) -> DataFrame:
     # shared _x59_sql oracle
     out = bloom_probe_score(posts, bench, words, id_col="doc_id")
     name = _fresh_name("s21_out")
-    runner.run_to_memory(out, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(out, name, "complete")
     return spark.table(name)
 
 
@@ -1205,7 +1191,7 @@ def _s22(spark: SparkSession, sf: str) -> DataFrame:
     tok = nb_bucketize(stream, [F.col("doc_id")], CLS_BUCKETS)
     scored = nb_score(tok, weights, F.lit(w0), F.lit(prior), "doc_id")
     name = _fresh_name("s22_out")
-    runner.run_to_memory(scored, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(scored, name, "complete")
     return spark.table(name)
 
 
@@ -1352,7 +1338,7 @@ def _s24(spark: SparkSession, sf: str) -> DataFrame:
     )
     rolled = star_rollup(stream, *star_rollup_dims(spark, sf))
     name = _fresh_name("s24_out")
-    runner.run_to_memory(rolled, name, "complete", state_partitions=STATE_SHARDS)
+    runner.run_to_memory(rolled, name, "complete")
     return spark.table(name)
 
 

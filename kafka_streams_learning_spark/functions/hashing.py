@@ -49,11 +49,6 @@ def hash32_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, {_HEX_CHARS_32}) AS BIGINT)"
 
 
-def seeded_hash60_sql(expr: str, seed: int) -> str:
-    """DuckDB SQL mirror of :func:`seeded_hash60`."""
-    return hash60_sql(f"'{seed}|' || {expr}")
-
-
 # ---------------------------------------------------------------------------
 # Linear permutation family over a 32-bit base hash:
 #   perm_i(h) = (A_i * h + B_i) mod P

@@ -9,6 +9,14 @@
   the observable emission sequence (KTable changelog semantics,
   `StreamsOrderCount.java:130-134`).
 - to_console — the reference's ubiquitous `.foreach(print)` sink.
+
+This module owns a stateful run's state partition count (the
+`spark.sql.shuffle.partitions` a stateful query starts with, which
+Spark fixes at its first checkpoint): every run is sized at
+`STATE_SHARDS`, or at the caller's volume-derived count, capped at
+the cores that run it. `ksl.state.partitions` is the only override; a
+session's `spark.sql.shuffle.partitions` does not size streaming
+state.
 """
 
 from __future__ import annotations
@@ -19,7 +27,13 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
-_SPARK_DEFAULT_SHUFFLE_PARTITIONS = "200"
+# State-store partitions for a run that does not size its own state, and
+# the floor of `derive_state_shards`. The count is sized to STATE VOLUME
+# (see TARGET_STATE_BYTES_PER_SHARD): the catalog's fixture state at
+# sf<=0.1 is tens of MB, where 8 shards measured 1.7x faster than 32 on
+# the interval join with identical results, and fewer choke on write
+# volume.
+STATE_SHARDS = 8
 
 # Shard-count derivation target (VERDICT r14 item 4): shard count is a
 # state-SIZE decision — every shard is a live RocksDB instance paying an
@@ -36,18 +50,18 @@ _SPARK_DEFAULT_SHUFFLE_PARTITIONS = "200"
 TARGET_STATE_BYTES_PER_SHARD = 40 << 20
 
 
-def derive_state_shards(
-    state_bytes: int | None, floor: int = 8
-) -> int:
+def derive_state_shards(state_bytes: int | None) -> int:
     """Shard count for an expected state volume: ceil(bytes / target),
-    floored at `floor` (the measured flat-bottom for the catalog's
+    floored at `STATE_SHARDS` (the measured flat-bottom for the catalog's
     tens-of-MB fixture state — fewer shards choke on write volume, more
     pay per-instance constants). `None`/non-positive estimates (unknown
     state) keep the floor, so a caller that cannot size its state gets
     exactly the historical behavior."""
     if not state_bytes or state_bytes <= 0:
-        return floor
-    return max(floor, math.ceil(state_bytes / TARGET_STATE_BYTES_PER_SHARD))
+        return STATE_SHARDS
+    return max(
+        STATE_SHARDS, math.ceil(state_bytes / TARGET_STATE_BYTES_PER_SHARD)
+    )
 
 
 def _checkpoint() -> str:
@@ -57,60 +71,27 @@ def _checkpoint() -> str:
 
 
 def _state_partitions(
-    spark: SparkSession, state_partitions: int | None = None
-) -> str | None:
-    """The `spark.sql.shuffle.partitions` a stateful run should start
-    with, or None to keep the session's. Sizes stateful-stream
-    parallelism to the cluster, not Spark's static default: the setting
-    fixes the state-store partition count at first checkpoint, and AQE
-    does NOT coalesce stateful streaming shuffles — a vanilla session's
-    200 partitions means 200 state stores per operator (measured 3-4x
-    slower micro-batches on local[32] at sf0.01). Only the untouched
-    default is overridden, so a deliberately tuned session is left alone;
-    on a real cluster defaultParallelism is the executor-core count,
-    which is the right state shard count.
+    spark: SparkSession, state_partitions: int = STATE_SHARDS
+) -> str:
+    """The `spark.sql.shuffle.partitions` a stateful run starts with: the
+    `ksl.state.partitions` pin if one is set (never capped — a 100 TB
+    deployment that needs more shards than cores sets it), otherwise
+    min(`state_partitions`, defaultParallelism). The setting fixes the
+    state-store partition count at first checkpoint, and AQE does NOT
+    coalesce stateful streaming shuffles, so a session's
+    `spark.sql.shuffle.partitions` (200 in a vanilla session: 200 state
+    stores per operator) does not size streaming state.
 
-    A session that was EXPLICITLY configured (builder/spark-submit conf)
-    is never overridden, even to exactly 200 — that intent is visible in
-    the SparkContext conf. Caveat: that check only sees confs present when
-    the SparkContext was CREATED; `getOrCreate` layering a builder conf
-    onto a pre-existing context stores it session-side only, where a
-    runtime `spark.conf.set(..., "200")` is indistinguishable from the
-    default. Both are overridden WITH a warning log; to pin a deliberate
-    200 in such a session, set `ksl.state.partitions=200` (checked first,
-    always wins) or any non-200 value via `spark.conf.set`.
-
-    `state_partitions` is the CALLER's sizing (a query that knows its
-    state volume): shard count is a state-size decision as much as a
-    parallelism one — every shard is a live state-store instance (a
-    RocksDB open + commit per micro-batch), so over-sharding small state
-    buys pure fixed cost. Target ~10-100 MB of state per shard, floored
-    at enough shards to spread hot keys. The run caps that volume-sized
-    count at defaultParallelism: each partition is one task per trigger,
-    so partitions beyond the cores that run them add a second wave of
-    tasks to every micro-batch (8 on 4 cores: keyed perfbench wall
-    −20%, BENCH_NOTES "State partitions capped at cores"). The cap only
-    lowers a count, never raises one. A user pin via
-    `ksl.state.partitions` beats both and is never capped."""
-    key = "spark.sql.shuffle.partitions"
+    `state_partitions` is `STATE_SHARDS`, or the CALLER's volume-derived
+    count (`derive_state_shards`). The cap only lowers a count, never
+    raises one: each partition is one task per trigger, so partitions
+    beyond the cores that run them add a second wave of tasks to every
+    micro-batch (8 on 4 cores: keyed perfbench wall −20%, BENCH_NOTES
+    "State partitions capped at cores")."""
     pinned = spark.conf.get("ksl.state.partitions", None)
     if pinned is not None:
-        return pinned  # explicit engine-level opt-out
-    if state_partitions is not None:
-        return str(min(state_partitions, spark.sparkContext.defaultParallelism))
-    if spark.sparkContext.getConf().contains(key):
-        return None  # explicitly configured at session build — respect it
-    if spark.conf.get(key) == _SPARK_DEFAULT_SHUFFLE_PARTITIONS:
-        target = str(spark.sparkContext.defaultParallelism)
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "overriding %s=200 (Spark default) with defaultParallelism=%s "
-            "for streaming state sizing; set it in the session builder to "
-            "pin a deliberate value", key, target,
-        )
-        return target
-    return None
+        return pinned
+    return str(min(state_partitions, spark.sparkContext.defaultParallelism))
 
 
 # Spark's default checkpoint manager (FileContext-based) renames through
@@ -198,7 +179,7 @@ def run_to_memory(
     name: str,
     output_mode: str = "update",
     checkpoint: str | None = None,
-    state_partitions: int | None = None,
+    state_partitions: int = STATE_SHARDS,
     arrow_batch_rows: int | None = None,
 ) -> None:
     """Run a streaming DataFrame to completion into an in-memory table
@@ -212,11 +193,12 @@ def run_to_memory(
     the operator drops it) gets a logged warning — the caller then pins
     the checkpoint with `stateful.pin_shard_count` (ADVICE r12).
 
-    `state_partitions` is the caller's volume-sized state partition
-    count; the run caps it at defaultParallelism (a `ksl.state.partitions`
-    pin wins uncapped, see `_state_partitions`). It and
-    `arrow_batch_rows` hold for this run only; the session's prior values
-    are restored afterwards.
+    The run's state partition count is `state_partitions`
+    (`STATE_SHARDS`, or the caller's volume-derived count) capped at
+    defaultParallelism; a `ksl.state.partitions` pin is the only
+    override, and the session's `spark.sql.shuffle.partitions` does not
+    size it (`_state_partitions`). It and `arrow_batch_rows` hold for
+    this run only; the session's prior values are restored afterwards.
     `_run_to_completion` attaches the checkpoint (`checkpoint`, or a
     fresh directory removed at interpreter exit); a local one commits
     through the FileSystem-based checkpoint manager, without the
@@ -275,7 +257,10 @@ def run_collect_batches(
     checkpoint: str | None = None,
 ) -> list[list]:
     """Run to completion, capturing each micro-batch's emitted rows in
-    order — the update-mode emission sequence as observable behavior."""
+    order — the update-mode emission sequence as observable behavior.
+    Sized like `run_to_memory` with no count: `STATE_SHARDS` capped at
+    defaultParallelism unless `ksl.state.partitions` pins it; the
+    session's `spark.sql.shuffle.partitions` does not size the run."""
     batches: list[list] = []
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:

@@ -1756,10 +1756,7 @@ def test_bench_paired_classification_table():
     unstable A/B pairs are noise (never indicted), stable-but-elevated
     pairs are real movers only in a CLEAN canary window, and a throttled
     window indicts nothing."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from bench_paired import classify_pair
+    from tools.bench_paired import classify_pair
 
     warm = {
         "q": [1.0, 1.0], "r": [1.0, 1.0], "s": [1.0, 1.0],
@@ -1786,10 +1783,7 @@ def test_bench_paired_host_clean_requires_both_canaries():
     """VERDICT r13 item 3: host_clean must gate on the streaming canary
     too — the r13 batch canary read clean (0.195/0.185/0.172) through a
     window where every streaming row ran 40-75% hot."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from bench_paired import (
+    from tools.bench_paired import (
         CANARY_CLEAN_REF_S,
         CANARY_HOT_FACTOR,
         STREAM_CANARY_HOT_THRESHOLD_S,
@@ -1813,10 +1807,7 @@ def test_bench_paired_pair_symmetry_criterion():
     168/267 and 209/161, every canary in-band). A pair whose totals
     disagree beyond PAIR_TOTAL_SYMMETRY_MAX measured two different
     hosts and is inadmissible regardless of canary readings."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from bench_paired import pair_is_symmetric
+    from tools.bench_paired import pair_is_symmetric
 
     # clean precedent bands: r12 158.5/149.7, r14 146.8/154.6
     assert pair_is_symmetric({"a": 158.5}, {"a": 149.7})
@@ -1833,12 +1824,9 @@ def test_oracle_check_rejects_unknown_query_names():
     matches no catalog entry (VERDICT r13 "what's wrong" #3): a typo'd
     list used to silently shrink the checked set and still print
     "FAILURES: none" — indistinguishable from a green gate."""
-    import sys
-
     import pytest
 
-    sys.path.insert(0, "/root/repo/tools")
-    from oracle_check import resolve_requested
+    from tools.oracle_check import resolve_requested
 
     catalog = {"q01_uppercase", "s03_stream_fraud_alerts", "x03_fingerprint"}
     # valid subset passes through untouched

@@ -744,10 +744,10 @@ def test_interactive_state_store_fetch(spark, tmpdir):
 
 
 def test_state_partitions_opt_out_conf_pins_value(spark, tmpdir):
-    """`ksl.state.partitions` is the engine-level escape hatch for the one
-    case the builder-conf check cannot see (a deliberate 200 set on a
-    reused context): it is consulted first and always wins — over the
-    caller's `state_partitions` too — and is the partition count the
+    """`ksl.state.partitions` is the only override of a stateful run's
+    partition count (a deployment that needs more state shards than
+    cores): it is consulted first and always wins — over the caller's
+    `state_partitions` too, uncapped — and is the partition count the
     stateful query runs with, recorded in its checkpoint."""
     shuffle = "spark.sql.shuffle.partitions"
     base = ts("2024-01-01T00:00:00")
@@ -816,10 +816,39 @@ def test_caller_state_partitions_capped_at_cores(spark, tmpdir):
         spark.conf.set(shuffle, prev)
 
 
+def test_collect_batches_sized_by_runner_not_session(spark, tmpdir):
+    """`run_collect_batches` follows `run_to_memory`'s rule: with no
+    count it runs `STATE_SHARDS` capped at defaultParallelism — 4 on the
+    local[4] session — whatever the session's runtime
+    `spark.sql.shuffle.partitions`, and leaves that conf as it was."""
+    shuffle = "spark.sql.shuffle.partitions"
+    assert spark.sparkContext.defaultParallelism == 4
+    base = ts("2024-01-01T00:00:00")
+    stage_explicit_chunks(
+        spark, [[("a", 1, 10.0, base), ("b", 2, 10.0, base)]],
+        EVENTS_SCHEMA, f"{tmpdir}/in",
+    )
+    stream = replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA)
+    prev = spark.conf.get(shuffle)
+    try:
+        spark.conf.set(shuffle, "3")
+        ckpt = f"{tmpdir}/ckpt"
+        batches = runner.run_collect_batches(
+            stream.groupBy("key").count(), "complete", checkpoint=ckpt
+        )
+        assert spark.conf.get(shuffle) == "3"
+        assert checkpoint_partitions(ckpt) == "4"
+        assert sorted(tuple(r) for r in batches[-1]) == [("a", 1), ("b", 1)]
+    finally:
+        spark.conf.set(shuffle, prev)
+
+
 def test_state_partitions_cap_never_raises_a_count():
-    """Spark-free: the cap is min(caller's count, defaultParallelism). A
-    32-core host keeps the catalog's 8; a count above the cores drops to
-    them; a `ksl.state.partitions` pin passes through as it is."""
+    """Spark-free: the count is min(caller's count, defaultParallelism),
+    and a run that passes none is sized at `STATE_SHARDS` (8) by the
+    same rule. A 32-core host keeps 8; a count above the cores drops to
+    them; a `ksl.state.partitions` pin passes through as it is. The rule
+    reads no session conf but the pin."""
     from types import SimpleNamespace
 
     def session(cores, pin=None):
@@ -832,6 +861,9 @@ def test_state_partitions_cap_never_raises_a_count():
     assert runner._state_partitions(session(32), 8) == "8"
     assert runner._state_partitions(session(4), 8) == "4"
     assert runner._state_partitions(session(4, pin="64"), 8) == "64"
+    assert runner._state_partitions(session(32)) == "8"
+    assert runner._state_partitions(session(4)) == "4"
+    assert runner._state_partitions(session(4, pin="64")) == "64"
     for cores in (1, 4, 32):
         for asked in range(1, 40):
             assert runner._state_partitions(session(cores), asked) == str(
@@ -1807,8 +1839,8 @@ def test_interval_join_coalescing_invariance(spark, tmpdir, seed):
 
 def test_derive_state_shards_formula():
     """VERDICT r14 item 4: shard count is a state-SIZE decision. The
-    derivation is ceil(state_bytes / target) floored at the caller's
-    measured flat-bottom; unknown state keeps the floor exactly."""
+    derivation is ceil(state_bytes / target) floored at `STATE_SHARDS`,
+    the measured flat-bottom; unknown state keeps the floor exactly."""
     from kafka_streams_learning_spark.streaming.runner import (
         TARGET_STATE_BYTES_PER_SHARD as T,
         derive_state_shards,
@@ -1820,7 +1852,6 @@ def test_derive_state_shards_formula():
     assert derive_state_shards(8 * T) == 8
     assert derive_state_shards(8 * T + 1) == 9
     assert derive_state_shards(12 * T) == 12
-    assert derive_state_shards(3 * T, floor=4) == 4
 
 
 def test_interval_join_shards_stay_floored_at_gate_scales():

@@ -7,9 +7,11 @@ same properties tests/test_plans.py asserts). Run from the repo root:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from kafka_streams_learning_spark import get_spark
 from kafka_streams_learning_spark.catalog import all_queries
@@ -338,7 +340,7 @@ def main() -> None:
         out.append("```")
         out.append(formatted_plan(df).strip())
         out.append("```\n")
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w", encoding="utf-8") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
 

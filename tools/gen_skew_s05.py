@@ -18,10 +18,10 @@ Two fixture families under `/root/repo/.scratch`:
 - `skewchlog1` / `skewchlog10` — the KTable UPSERT hot-spot shape the
   r12 verdict called out: 1M/10M changelog UPDATES over 150k dimension
   keys where one key receives ~50% of all versions, so its bucket's
-  read-merge-rewrite dominates every micro-batch. Consumed directly by
-  `tools/skew_probe_s03s05.py` (snapshot correctness asserted inline
-  against DuckDB's arg-max-by-version — output is one row per key,
-  tractable at any decade).
+  read-merge-rewrite dominates every micro-batch. Measured by the sweep-9
+  probe (snapshot correctness asserted against DuckDB's
+  arg-max-by-version — output is one row per key, tractable at any
+  decade); its results are in BENCH_NOTES "Round 13: key-skew sweep 9".
 
 s03 needs no new data: it reads only `events`, which the existing
 skew01/skew1/skew10 decades already provide.

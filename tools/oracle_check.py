@@ -14,12 +14,13 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canon_cell(v) -> str:
