@@ -20,17 +20,21 @@ the state-budget default and the shard-count tag.
 Operational contracts (apply to every shard-keyed operator):
 
 - **Shard count is part of the checkpoint format.** The state key is
-  `hash(user_id) % n_shards`; restarting an existing checkpoint with a
-  different `n_shards` re-hashes users onto other shards and silently
-  orphans their state. `pin_shard_count(checkpoint_dir, n_shards)`
-  persists the count next to the checkpoint and fails fast on mismatch;
+  the label of shard `hash(user_id) % n_shards` (`shard_labels`);
+  restarting an existing checkpoint with a different `n_shards` re-hashes
+  users onto other shards and silently orphans their state.
+  `pin_shard_count(checkpoint_dir, n_shards)` persists the count and its
+  labels next to the checkpoint and fails fast on a mismatch;
   `runner.run_to_memory` calls it from the operator's output tag.
-- **Checkpoint format breaks (r11, r12).** The r11 shard re-keying
+- **Checkpoint format breaks (r11, r12, r16).** The r11 shard re-keying
   changed the grouping key (user_id → _shard) and both state schemas;
   r12 re-typed the shard state columns from array<long>/array<string>
   to packed binary blobs (see the note at
   `_ORDERED_SLIDING_STATE_SCHEMA_SHARDED`: list-typed state made the
-  JVM-side pickle decode quadratic in buffer length under key skew).
+  JVM-side pickle decode quadratic in buffer length under key skew);
+  r16 replaced the plain shard ids 0..n-1 with hash-placed labels and
+  the default count 32 with `STATE_SHARDS` (see `shard_labels`), and
+  `pin_shard_count` refuses a marker without the new labels.
   Checkpoints written by earlier versions cannot restart on this code —
   restarts need fresh checkpoints. (Catalog/bench runs always create
   fresh checkpoints.)
@@ -48,11 +52,13 @@ Operational contracts (apply to every shard-keyed operator):
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import partial
+from functools import lru_cache, partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState
+
+from kafka_streams_learning_spark.streaming.runner import STATE_SHARDS
 
 ALERT_OUTPUT_SCHEMA = (
     "key string, record_id long, amount double, running_cnt long, alert string"
@@ -126,7 +132,7 @@ def fraud_alert_stream(
     re-keying (`fraud_alert_stream_sharded` — invocations O(shards ×
     batches) instead of O(distinct keys × batches); the r13 sweep-9 arm
     for high key cardinality). `n_shards` sizes the sharded arm (default
-    `REORDER_SHARDS`); it is ignored by the per-key arm, whose state key
+    `STATE_SHARDS`); it is ignored by the per-key arm, whose state key
     is the user key itself."""
     from pyspark.sql import functions as F
 
@@ -146,21 +152,60 @@ def fraud_alert_stream(
     )
 
 
-# How many reorder-buffer shards a stream is re-keyed onto. The r10
-# second-decade probe (BENCH_NOTES sweep 6) showed the per-USER-keyed
-# reorder buffers were linear with a ~32 µs/event constant that was
-# entirely per-group invocation overhead: ~key-cardinality × batches
-# `applyInPandasWithState` invocations at ~200 µs each (state ser/de +
-# per-group pandas frame). Re-keying onto a bounded shard count makes
-# invocations O(shards × batches) — independent of key cardinality —
-# and lets the per-user logic vectorize across the whole shard. At
-# cluster scale, size this ~ a small multiple of total cores. It must
-# stay STABLE across restarts of one checkpoint: the shard id is the
-# state key, so changing it orphans existing state. (The r11 re-keying
-# itself was such a break: checkpoints written by the per-user-keyed
-# implementation cannot restart on this one — a one-time migration cost,
-# acceptable here because every catalog run creates a fresh checkpoint.)
-REORDER_SHARDS = 32
+# Shard labels. Re-keying onto a bounded shard count makes group
+# invocations O(shards × batches), independent of key cardinality (the
+# r10 probe, BENCH_NOTES sweep 6, measured ~200 µs per per-user group
+# invocation). The shard count defaults to `runner.STATE_SHARDS`, so a
+# state partition holds STATE_SHARDS / partitions groups, whatever the
+# host. The `_shard` VALUES are chosen so Spark's hash partitioning
+# spreads them evenly: a stateful operator's group lands on state
+# partition pmod(murmur3(_shard, 42), P), and the plain ids 0..31 that
+# earlier versions used put 14/7/6/5 groups on the 4 partitions of a
+# 4-core host (6/3/3/2/8/4/3/3 on 8), so one task of every trigger
+# carried ~44% of the rows and finished last. Label i is the smallest
+# non-negative long that hashes to i mod n, so for any P dividing n
+# every partition holds exactly n/P groups. Like the count, the labels
+# are part of the checkpoint format (`pin_shard_count`).
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _murmur3_mix(h1: int, k1: int) -> int:
+    k1 = _rotl32((k1 * 0xCC9E2D51) & _M32, 15) * 0x1B873593 & _M32
+    return (_rotl32(h1 ^ k1, 13) * 5 + 0xE6546B64) & _M32
+
+
+def _murmur3_long(value: int, seed: int = 42) -> int:
+    """Spark's `Murmur3_x86_32.hashLong(value, seed)`: the hash that
+    `HashPartitioning` and SQL `hash()` apply to a bigint, as a signed
+    32-bit int."""
+    v = value & 0xFFFFFFFFFFFFFFFF
+    h = _murmur3_mix(_murmur3_mix(seed, v & _M32), v >> 32) ^ 8
+    h ^= h >> 16
+    h = (h * 0x85EBCA6B) & _M32
+    h ^= h >> 13
+    h = (h * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@lru_cache(maxsize=None)
+def shard_labels(n_shards: int) -> tuple[int, ...]:
+    """The `_shard` value of each of `n_shards` shards: label i is the
+    smallest non-negative long with pmod(murmur3(label, 42), n) == i."""
+    labels: list[int | None] = [None] * n_shards
+    missing, x = n_shards, 0
+    while missing:
+        i = _murmur3_long(x) % n_shards
+        if labels[i] is None:
+            labels[i] = x
+            missing -= 1
+        x += 1
+    return tuple(labels)
+
 
 _SHARDED_ALERT_STATE_SCHEMA = "keys binary, cnts binary"
 
@@ -288,7 +333,7 @@ def fraud_alert_stream_sharded(
         "record_id", "amount", "ts",
     )
     return _shard_keyed_state(
-        base, "key", n_shards or REORDER_SHARDS,
+        base, "key", n_shards or STATE_SHARDS,
         partial(_sharded_alert_fn, threshold, alert_after),
         ALERT_OUTPUT_SCHEMA, _SHARDED_ALERT_STATE_SCHEMA,
         max_state_bytes=_max_state_bytes,
@@ -306,7 +351,8 @@ def _shard_keyed_state(
     max_state_bytes: int | None = None,
 ) -> DataFrame:
     """The one builder behind every shard-keyed operator: re-key `df`
-    onto `pmod(xxhash64(key_col), n_shards)`, run the group fn
+    onto shard label `shard_labels(n_shards)[pmod(xxhash64(key_col),
+    n_shards)]`, run the group fn
     `make_fn(max_state_bytes=...)` per shard through
     `applyInPandasWithState`, and tag the result with `n_shards`.
 
@@ -324,8 +370,12 @@ def _shard_keyed_state(
     warning instead of a possibly-wrong auto-pin."""
     from pyspark.sql import functions as F
 
+    labels = F.array(*map(F.lit, shard_labels(n_shards))).cast("array<bigint>")
     sharded = df.withColumn(
-        "_shard", F.pmod(F.xxhash64(key_col), F.lit(n_shards))
+        "_shard",
+        F.element_at(
+            labels, (F.pmod(F.xxhash64(key_col), F.lit(n_shards)) + 1).cast("int")
+        ),
     )
     if disorder is not None:
         sharded = sharded.withWatermark("ts", disorder)
@@ -341,17 +391,20 @@ def _shard_keyed_state(
 
 
 def pin_shard_count(checkpoint_dir: str, n_shards: int) -> None:
-    """Persist the reorder-shard count alongside a checkpoint and fail
-    fast on mismatch (ADVICE r11): `n_shards` is part of the checkpoint
-    FORMAT for the shard-keyed operators — the state key is
-    `hash(user_id) % n_shards`, so restarting an existing checkpoint with
-    a different count silently re-hashes users onto other shards and
-    orphans their state, producing wrong counts/matches with no error.
+    """Persist the shard count and its labels alongside a checkpoint and
+    fail fast on mismatch (ADVICE r11): both are part of the checkpoint
+    FORMAT for the shard-keyed operators — the state key is the label of
+    shard `hash(user_id) % n_shards`, so restarting an existing
+    checkpoint with a different count or labelling silently re-hashes
+    users onto other shards and orphans their state, producing wrong
+    counts/matches with no error.
 
     Writes `ksl-shard-count.json` into `checkpoint_dir` on first use and
-    raises ValueError if a later start supplies a different count — the
-    same pin-at-first-checkpoint discipline Spark applies to
-    `spark.sql.shuffle.partitions` for stateful queries. A checkpoint
+    raises ValueError if a later start supplies a different count, or if
+    the marker's labels differ from `shard_labels(n_shards)` or are
+    missing (a marker written before r16 keyed shards on the plain ids
+    0..n-1) — the same pin-at-first-checkpoint discipline Spark applies
+    to `spark.sql.shuffle.partitions` for stateful queries. A checkpoint
     that already has offsets but no marker predates the pin: the count
     cannot be verified, so a warning is logged and the marker is written
     with the supplied value."""
@@ -359,16 +412,25 @@ def pin_shard_count(checkpoint_dir: str, n_shards: int) -> None:
     import logging
     import os
 
+    labels = list(shard_labels(n_shards))
     marker = os.path.join(checkpoint_dir, "ksl-shard-count.json")
     if os.path.exists(marker):
         with open(marker) as fh:
-            pinned = json.load(fh)["n_shards"]
-        if pinned != n_shards:
+            pinned = json.load(fh)
+        if pinned["n_shards"] != n_shards:
             raise ValueError(
                 f"checkpoint {checkpoint_dir} was written with "
-                f"n_shards={pinned}; restarting with n_shards={n_shards} "
-                "would orphan existing shard state — use the pinned count "
-                "or start a fresh checkpoint"
+                f"n_shards={pinned['n_shards']}; restarting with "
+                f"n_shards={n_shards} would orphan existing shard state — "
+                "use the pinned count or start a fresh checkpoint"
+            )
+        if pinned.get("labels") != labels:
+            raise ValueError(
+                f"checkpoint {checkpoint_dir} was written with shard labels "
+                f"{pinned.get('labels')} (None: before r16, shards were "
+                f"keyed on their ids); this code keys n_shards={n_shards} "
+                f"on {labels}, which would orphan existing shard state — "
+                "start a fresh checkpoint"
             )
         return
     if os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
@@ -378,14 +440,14 @@ def pin_shard_count(checkpoint_dir: str, n_shards: int) -> None:
         )
     os.makedirs(checkpoint_dir, exist_ok=True)
     with open(marker, "w") as fh:
-        json.dump({"n_shards": n_shards}, fh)
+        json.dump({"n_shards": n_shards, "labels": labels}, fh)
 
 
 SLIDING_OUTPUT_SCHEMA = "user_id long, event_id long, ts timestamp, cnt long"
 
 
 def sliding_count_stream(
-    df: DataFrame, lookback_micros: int, n_shards: int = REORDER_SHARDS,
+    df: DataFrame, lookback_micros: int, n_shards: int = STATE_SHARDS,
     _max_composite: int = 2**62,
     _max_state_bytes: int | None = None,
 ) -> DataFrame:
@@ -437,7 +499,7 @@ ASOF_OUTPUT_SCHEMA = (
 def asof_join_stream(
     df: DataFrame,
     match_type: str = "purchase",
-    n_shards: int = REORDER_SHARDS,
+    n_shards: int = STATE_SHARDS,
     _max_composite: int = 2**62,
     _max_state_bytes: int | None = None,
 ) -> DataFrame:
@@ -796,7 +858,7 @@ def ordered_sliding_count_stream(
     df: DataFrame,
     lookback_micros: int,
     disorder: str,
-    n_shards: int = REORDER_SHARDS,
+    n_shards: int = STATE_SHARDS,
     _max_composite: int = 2**62,
     _max_state_bytes: int | None = None,
 ) -> DataFrame:
@@ -1013,7 +1075,7 @@ def ordered_asof_join_stream(
     df: DataFrame,
     disorder: str,
     match_type: str = "purchase",
-    n_shards: int = REORDER_SHARDS,
+    n_shards: int = STATE_SHARDS,
     _max_composite: int = 2**62,
     _max_state_bytes: int | None = None,
 ) -> DataFrame:

@@ -708,6 +708,83 @@ def test_sharded_fraud_checkpoint_recovery(spark, tmpdir):
         stateful.pin_shard_count(ckpt, 4)
 
 
+def test_shard_labels_placed_by_spark_hash(spark):
+    """Label i of `shard_labels(n)` is the smallest non-negative bigint
+    that Spark's own `hash()` (the Murmur3 with seed 42 that
+    `HashPartitioning` applies) places on pmod(.., n) == i."""
+    for n in (2, 4, 7, 8):
+        labels = stateful.shard_labels(n)
+        buckets = {
+            r.id: r.b
+            for r in spark.range(max(labels) + 1)
+            .select("id", F.expr(f"pmod(hash(id), {n})").alias("b"))
+            .collect()
+        }
+        assert [buckets[x] for x in labels] == list(range(n)), n
+        # no smaller bigint lands on a label's bucket
+        assert all(labels[b] <= x for x, b in buckets.items()), n
+
+
+def test_sharded_state_balanced_across_partitions(spark, tmpdir):
+    """On local[4] the 8 default shard groups of a sharded fraud run land
+    2 per state partition, read back from the checkpoint's state store
+    (the plain ids 0..7 land 3/3/0/2, and 0..31 land 14/7/6/5)."""
+    from kafka_streams_learning_spark.streaming import interactive
+
+    assert spark.sparkContext.defaultParallelism == 4
+    base = ts("2024-01-01T00:00:00")
+    chunks = [
+        [(f"k{i}", c * 1000 + i, 600.0, base + dt.timedelta(seconds=i))
+         for i in range(120)]
+        for c in range(2)
+    ]
+    stage_explicit_chunks(spark, chunks, EVENTS_SCHEMA, f"{tmpdir}/in")
+    alerts = stateful.fraud_alert_stream(
+        replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA), "key",
+        threshold=500.0, impl="sharded",
+    )
+    ckpt = f"{tmpdir}/ckpt"
+    runner.run_to_memory(alerts, "balanced_out", "append", checkpoint=ckpt)
+    assert checkpoint_partitions(ckpt) == "4"
+    per_partition = {
+        r.partition_id: sorted(r.shards)
+        for r in interactive.read_state(spark, ckpt)
+        .groupBy("partition_id")
+        .agg(F.collect_set("key._shard").alias("shards"))
+        .collect()
+    }
+    assert sorted(per_partition) == [0, 1, 2, 3]
+    assert all(len(s) == 2 for s in per_partition.values()), per_partition
+    assert sorted(sum(per_partition.values(), [])) == sorted(
+        stateful.shard_labels(runner.STATE_SHARDS)
+    )
+
+
+def test_restart_refuses_unlabelled_shard_marker(spark, tmpdir):
+    """A checkpoint whose marker was written before shards were
+    labelled (`{"n_shards": 32}`, plain ids 0..31) makes a restart raise
+    before the query starts, also when the restart passes the same
+    count."""
+    import json
+    import os
+
+    ckpt = f"{tmpdir}/old"
+    os.makedirs(ckpt)
+    with open(f"{ckpt}/ksl-shard-count.json", "w") as fh:
+        json.dump({"n_shards": 32}, fh)
+    base = ts("2024-01-01T00:00:00")
+    stage_explicit_chunks(
+        spark, [[("a", 1, 600.0, base)]], EVENTS_SCHEMA, f"{tmpdir}/in"
+    )
+    alerts = stateful.fraud_alert_stream_sharded(
+        replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA), "key",
+        threshold=500.0, n_shards=32,
+    )
+    with pytest.raises(ValueError, match="shard labels None"):
+        runner.run_to_memory(alerts, "old_marker", "append", checkpoint=ckpt)
+    assert not os.path.exists(f"{ckpt}/offsets")
+
+
 def test_interactive_state_store_fetch(spark, tmpdir):
     """IQ1 (`OrderCountTumblingWindow.java:130-145`): fetch one key's
     windowed counts for a window-start range directly from the LIVE state
@@ -1615,6 +1692,7 @@ def test_pin_shard_count_fails_fast_on_mismatch(tmpdir):
     checkpoint format for the shard-keyed stateful operators — the pin
     writes a marker on first use, accepts a matching restart, and
     refuses a mismatched one instead of silently orphaning state."""
+    import json
     import os
 
     ckpt = os.path.join(str(tmpdir), "ckpt")
@@ -1622,6 +1700,16 @@ def test_pin_shard_count_fails_fast_on_mismatch(tmpdir):
     stateful.pin_shard_count(ckpt, 32)  # same count restarts fine
     with pytest.raises(ValueError, match="n_shards=32"):
         stateful.pin_shard_count(ckpt, 16)
+    # the marker records the labels; one whose labels differ is refused
+    marker = os.path.join(ckpt, "ksl-shard-count.json")
+    with open(marker) as fh:
+        assert json.load(fh) == {
+            "n_shards": 32, "labels": list(stateful.shard_labels(32)),
+        }
+    with open(marker, "w") as fh:
+        json.dump({"n_shards": 32, "labels": list(range(32))}, fh)
+    with pytest.raises(ValueError, match="shard labels"):
+        stateful.pin_shard_count(ckpt, 32)
     # a pre-pin checkpoint (offsets exist, no marker) is adopted with a
     # warning, then pinned
     legacy = os.path.join(str(tmpdir), "legacy")

@@ -25,7 +25,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF1_DIR = "/root/repo/.scratch/sf1full"
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+SF1_DIR = os.path.join(SCRATCH, "sf1full")
 BAND = 1.5
 
 

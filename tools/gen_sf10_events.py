@@ -6,7 +6,7 @@ s12/s20 (watermark-driven reorder buffers under real disorder) measured
 decade is not enough to call the class. This writes a shape-matched
 10M-event / 150k-user `events.parquet` (same generator as the sf1 decade:
 30-day window, 5 event types, ~67 events/user) into
-/root/repo/.scratch/sf10/, with symlinks for every other table pointing
+.scratch/sf10/, with symlinks for every other table pointing
 at the sf1 probe dir (documents/embeddings) or sf0.1 (TPC-H tables) —
 only events rows matter for the probed s-rows.
 
@@ -30,14 +30,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gen_sf1_probe_data import gen_events  # noqa: E402
 
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 N_EVENTS_SF10 = 10_000_000
 N_USERS_SF10 = 150_000
 SEED = 20260815 + 10
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf10"
-    sf1_dir = "/root/repo/.scratch/sf1"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(SCRATCH, "sf10")
+    sf1_dir = os.path.join(SCRATCH, "sf1")
     os.makedirs(out, exist_ok=True)
     ev_dst = os.path.join(out, "events.parquet")
     reuse = False

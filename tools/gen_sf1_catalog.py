@@ -25,7 +25,7 @@ Per-table independent seeding ([SEED, table_idx]) so any subset
 regenerates identically (the ADVICE r11 rng lesson). Staleness-guarded
 by parquet-footer row counts.
 
-Usage: python tools/gen_sf1_catalog.py [out_dir=/root/repo/.scratch/sf1full]
+Usage: python tools/gen_sf1_catalog.py [out_dir=.scratch/sf1full]
 (run gen_sf1_tpch_streams.py and gen_sf1_probe_data.py first)
 """
 
@@ -38,6 +38,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 SEED = 20260816 + 200
 N_CUSTOMER = 150_000
 N_SUPPLIER = 10_000
@@ -115,7 +119,7 @@ def gen_part(rng: np.random.Generator) -> pa.Table:
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1full"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(SCRATCH, "sf1full")
     os.makedirs(out, exist_ok=True)
     gens = (
         ("customer", gen_customer, N_CUSTOMER),
@@ -135,11 +139,11 @@ def main() -> int:
         if not reuse:
             pq.write_table(gen(np.random.default_rng([SEED, idx])), dst)
     links = {
-        "orders": "/root/repo/.scratch/sf1tpch/orders.parquet",
-        "lineitem": "/root/repo/.scratch/sf1tpch/lineitem.parquet",
-        "events": "/root/repo/.scratch/sf1/events.parquet",
-        "documents": "/root/repo/.scratch/sf1/documents.parquet",
-        "embeddings": "/root/repo/.scratch/sf1/embeddings.parquet",
+        "orders": os.path.join(SCRATCH, "sf1tpch/orders.parquet"),
+        "lineitem": os.path.join(SCRATCH, "sf1tpch/lineitem.parquet"),
+        "events": os.path.join(SCRATCH, "sf1/events.parquet"),
+        "documents": os.path.join(SCRATCH, "sf1/documents.parquet"),
+        "embeddings": os.path.join(SCRATCH, "sf1/embeddings.parquet"),
         "region": "/root/testdata/sf0.1/region.parquet",
         "nation": "/root/testdata/sf0.1/nation.parquet",
     }

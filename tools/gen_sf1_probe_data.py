@@ -16,7 +16,7 @@ driver shape at sf0.1 (measured 2026-08-15):
     label centroids (the IVF/cluster structure x13/x26/x39 exploit).
 
 Deterministic (numpy PCG, fixed seed). Output parquet lands in
-/root/repo/.scratch/sf1/ (gitignored) next to SYMLINKS for the other
+.scratch/sf1/ (gitignored) next to SYMLINKS for the other
 tables pointing at sf0.1 — catalog loaders resolve any table by name,
 only documents/embeddings rows matter for the probed x-rows.
 
@@ -32,6 +32,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 VOCAB = [
     "a", "agg", "batch", "big", "column", "customer", "data", "dup",
     "fast", "filter", "group", "hash", "join", "key", "line", "merge",
@@ -127,7 +131,7 @@ def gen_events(
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(SCRATCH, "sf1")
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(SEED)
     pq.write_table(gen_documents(rng), os.path.join(out, "documents.parquet"))

@@ -3,7 +3,7 @@
 The sf1/sf10 probe dirs symlink orders/lineitem to sf0.1, so the first
 attempt to probe s04/s23 there was vacuous (both "scales" read identical
 join inputs — BENCH_NOTES r11). This writes shape-matched 10x tables
-into /root/repo/.scratch/sf1tpch/:
+into .scratch/sf1tpch/:
 
   orders: 1.5M rows (10x), o_orderdate uniform over the fixture's
     1995-01-01..2001-08-01 range, keys 0..N-1.
@@ -31,6 +31,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 N_ORDERS = 1_500_000
 N_ITEMS = 6_000_000
 SEED = 20260816
@@ -99,7 +103,7 @@ def gen_lineitem(rng: np.random.Generator) -> pa.Table:
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1tpch"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(SCRATCH, "sf1tpch")
     os.makedirs(out, exist_ok=True)
     # one INDEPENDENT generator per table (seed sequence [SEED, idx]):
     # reuse is decided per table, so threading a single rng sequentially

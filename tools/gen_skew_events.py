@@ -27,7 +27,7 @@ read only `events`, which is a REAL per-dir file — run
 row counts actually differ (the symlinked-probe-dir trap, BENCH_NOTES
 r11).
 
-Usage: python tools/gen_skew_events.py [out_root=/root/repo/.scratch]
+Usage: python tools/gen_skew_events.py [out_root=.scratch]
 """
 
 from __future__ import annotations
@@ -39,6 +39,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 SEED = 20260816 + 100
 N_USERS = 150_000
 HOT_USER = 0
@@ -77,7 +81,7 @@ def gen_skew_events(rng: np.random.Generator, n_events: int) -> pa.Table:
 
 
 def main() -> int:
-    root = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch"
+    root = sys.argv[1] if len(sys.argv) > 1 else SCRATCH
     for idx, (name, n_events) in enumerate(DECADES):
         out = os.path.join(root, name)
         os.makedirs(out, exist_ok=True)

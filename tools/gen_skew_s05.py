@@ -2,7 +2,7 @@
 item 4), reusing `gen_skew_events.py`'s pattern (independent seed per
 decade; symlinked siblings; a DuckDB-tractable hash-gate decade).
 
-Two fixture families under `/root/repo/.scratch`:
+Two fixture families under the checkout's `.scratch/`:
 
 - `skewcust1` / `skewcust10` — the s05 catalog row's fact side: 1M/10M
   ORDERS where ONE customer (o_custkey=1) carries ~50% of all orders
@@ -26,7 +26,7 @@ Two fixture families under `/root/repo/.scratch`:
 s03 needs no new data: it reads only `events`, which the existing
 skew01/skew1/skew10 decades already provide.
 
-Usage: python tools/gen_skew_s05.py [out_root=/root/repo/.scratch]
+Usage: python tools/gen_skew_s05.py [out_root=.scratch]
 """
 
 from __future__ import annotations
@@ -38,6 +38,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 SEED = 20260816 + 200
 SF_DIR = "/root/testdata/sf0.1"
 N_CUST = 15_000
@@ -109,7 +113,7 @@ def symlink_siblings(out_dir: str) -> None:
 
 
 def main() -> None:
-    out_root = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch"
+    out_root = sys.argv[1] if len(sys.argv) > 1 else SCRATCH
     for i, (name, n) in enumerate(ORDER_DECADES):
         out_dir = os.path.join(out_root, name)
         os.makedirs(out_dir, exist_ok=True)

@@ -29,6 +29,10 @@ DEFAULT_ROWS = [
     "x48_containment_pairs",
 ]
 
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 # Override with SCALE_PROBE_DIRS="sf1=/path,sf10=/path" to probe a
 # different pair of scales (e.g. the second events decade sf1 -> sf10,
 # VERDICT r10 item 4). Growth ratio is always last/first.
@@ -36,7 +40,7 @@ SF_DIRS = [
     tuple(pair.split("=", 1))
     for pair in os.environ.get(
         "SCALE_PROBE_DIRS",
-        "sf0.1=/root/testdata/sf0.1,sf1=/root/repo/.scratch/sf1",
+        f"sf0.1=/root/testdata/sf0.1,sf1={os.path.join(SCRATCH, 'sf1')}",
     ).split(",")
 ]
 

@@ -25,7 +25,7 @@ user carrying ~50% of all events):
 Hash CORRECTNESS of s06/s12/s20 on the skewed data is checked by the
 oracle replica, run separately (its own vanilla session):
 
-    python tools/oracle_check.py /root/repo/.scratch/skew1 \
+    python tools/oracle_check.py .scratch/skew1 \
         s06_stream_sliding_count s09_stream_asof_enrich \
         s12_stream_asof_unordered s20_stream_sliding_unordered
 
@@ -44,8 +44,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow.parquet as pq  # noqa: E402
 
-SKEW1 = "/root/repo/.scratch/skew1"
-SKEW10 = "/root/repo/.scratch/skew10"
+# fixtures live in the checkout's .scratch/ (gitignored)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+SKEW1 = os.path.join(SCRATCH, "skew1")
+SKEW10 = os.path.join(SCRATCH, "skew10")
 PROBE_ROWS = [
     "s06_stream_sliding_count",
     "s12_stream_asof_unordered",
