@@ -15,7 +15,8 @@ query exercises both the pass and fail branch on the fixtures.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import functools
+from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +51,91 @@ class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL; None → driver runs rows-only check
     doc: str
+
+
+# ---------------------------------------------------------------------------
+# Per-process set-up shared across catalog rows: replay stagings, trained
+# models and materialized intermediates. Each is declared once, with
+# `shared_artifact`, on a `fn(spark, sf)` builder; declaring it is what
+# makes `warm_setup` build it, so the bench pins every one-time cost to
+# its set-up step instead of charging the first catalog row that touches
+# it (the first-consumer attribution that made unchanged rows jump
+# between rounds, BENCH_NOTES.md "Standing cost structure").
+
+
+@dataclass
+class _Artifact:
+    build: Callable[[SparkSession, str], object]
+    model: bool
+    built: dict[str, object] = field(default_factory=dict)
+
+    def get(self, spark: SparkSession, sf: str) -> object:
+        value = self.built.get(sf)
+        if value is None or _staging_gone(value):
+            value = self.built[sf] = self.build(spark, sf)
+        return value
+
+
+_ARTIFACTS: dict[str, _Artifact] = {}
+
+
+def _staging_gone(value: object) -> bool:
+    """A builder that writes files returns their directory as a str, alone
+    or inside a tuple; the entry is rebuilt once any such directory is
+    gone (the run root is removed at interpreter exit)."""
+    import os
+
+    parts = value if isinstance(value, tuple) else (value,)
+    return any(isinstance(p, str) and not os.path.isdir(p) for p in parts)
+
+
+def shared_artifact(label: str, model: bool = False):
+    """Register `fn(spark, sf)` under `label`, built once per (process, sf).
+
+    `model=True` marks a trained model (or a count of the live table) that
+    `clear_model_caches` drops; the other entries are stagings and
+    materializations kept for the life of the process."""
+
+    def register(fn):
+        art = _ARTIFACTS[label] = _Artifact(fn, model)
+
+        @functools.wraps(fn)
+        def get(spark: SparkSession, sf: str):
+            return art.get(spark, sf)
+
+        return get
+
+    return register
+
+
+def warm_setup(spark: SparkSession, sf: str) -> dict[str, float]:
+    """Build every declared shared artifact for `sf`; returns each one's
+    wall seconds by label. A second call is pure cache hits."""
+    import time
+
+    import kafka_streams_learning_spark.catalog_ext  # noqa: F401 (declares)
+    import kafka_streams_learning_spark.catalog_streaming  # noqa: F401
+
+    out: dict[str, float] = {}
+    for label, art in _ARTIFACTS.items():
+        t0 = time.time()
+        art.get(spark, sf)
+        out[label] = round(time.time() - t0, 3)
+    return out
+
+
+def clear_model_caches() -> None:
+    """Drop the per-process trained models (the `model=True` entries) so
+    the next caller re-trains from scratch. Exists for the determinism
+    sweep: sharing models across its two sessions verifies assignment
+    reproducibility but lets training itself run only under the FIRST
+    session's shuffle.partitions (ADVICE r8) — clearing between sessions
+    makes the training path partition-count-swept too. Stagings and
+    materialized pair tables stay: their builder pipelines are
+    plan-audited separately."""
+    for art in _ARTIFACTS.values():
+        if art.model:
+            art.built.clear()
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_streams_learning_spark.catalog import QuerySpec
+from kafka_streams_learning_spark.catalog import QuerySpec, shared_artifact
 from kafka_streams_learning_spark.functions.hashing import (
     hash32_sql,
     hash60_sql,
@@ -357,25 +357,18 @@ SELECT vec_a, vec_b, score FROM scored WHERE score >= {EMB_DUP_THRESHOLD}
 
 # Shared intermediate of the MinHash dedup family: x11 reports the pair
 # table, x33 closes it into keep/drop verdicts. Same contract as
-# _EMB_PAIRS_CACHE below — one materialized generation per sf per
-# process, first consumer pays (BENCH_NOTES.md "Standing cost structure").
-_MH_PAIRS_CACHE: dict[str, DataFrame] = {}
-
-
+# _emb_pairs below — one materialized generation per sf per process.
+@shared_artifact("mh_pairs")
 def _mh_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    if sf not in _MH_PAIRS_CACHE:
-        from kafka_streams_learning_spark.operators.materialize import materialized
+    from kafka_streams_learning_spark.operators.materialize import materialized
 
-        pairs = dedup.lsh_candidate_pairs(
-            load_table(spark, sf, "documents"),
-            n_perm=MINHASH_PERMS,
-            bands=MINHASH_PERMS,
-            bucket_cap=MINHASH_BUCKET_CAP,
-        )
-        _MH_PAIRS_CACHE[sf] = materialized(
-            pairs, tag=f"mh-pairs-{sf.replace('/', '_')}"
-        )
-    return _MH_PAIRS_CACHE[sf]
+    pairs = dedup.lsh_candidate_pairs(
+        load_table(spark, sf, "documents"),
+        n_perm=MINHASH_PERMS,
+        bands=MINHASH_PERMS,
+        bucket_cap=MINHASH_BUCKET_CAP,
+    )
+    return materialized(pairs, tag=f"mh-pairs-{sf.replace('/', '_')}")
 
 
 def _x11(spark: SparkSession, sf: str) -> DataFrame:
@@ -479,18 +472,15 @@ _NORM_NV = (
 )
 
 
-_IVF_MOD_CACHE: dict[str, int] = {}
-
-
+# memoized per sf: the count is an uncached full-table action, and
+# without the memo every _x13 CONSTRUCTION paid a scan. Declared a model:
+# the modulus must re-derive alongside the centroids after a fixture
+# regeneration, or the stale modulus mismatches the oracle's live-table
+# count (r10 review finding).
+@shared_artifact("ivf_mod", model=True)
 def _ivf_centroid_mod(spark: SparkSession, sf: str) -> int:
-    # memoized per sf (the _CENTROID_CACHE pattern): the count is an
-    # uncached full-table action, and without the cache every _x13
-    # CONSTRUCTION paid a scan — bench warm repeats and the determinism
-    # sweep's two sessions each re-counted during pure plan building
-    if sf not in _IVF_MOD_CACHE:
-        n = load_table(spark, sf, "embeddings").count()
-        _IVF_MOD_CACHE[sf] = max(1, n // IVF_TARGET_CENTROIDS)
-    return _IVF_MOD_CACHE[sf]
+    n = load_table(spark, sf, "embeddings").count()
+    return max(1, n // IVF_TARGET_CENTROIDS)
 
 
 def _x13(spark: SparkSession, sf: str) -> DataFrame:
@@ -1036,30 +1026,23 @@ NEARDUP_BUCKET_CAP = 256
 # pipeline materializes it once and feeds every downstream report from the
 # materialized table (at 100 TB the pair table is the cheap artifact; the
 # banded self-join that produces it is the expensive one) — so the catalog
-# does the same: one generation per sf dir per process, the first consumer
-# in catalog order pays generation (the _CENTROID_CACHE / CCNet-bucket
-# attribution contract, BENCH_NOTES.md "Standing cost structure").
-_EMB_PAIRS_CACHE: dict[str, DataFrame] = {}
-
-
+# does the same: one generation per sf dir per process, built in the
+# bench's set-up (catalog.shared_artifact).
+@shared_artifact("emb_pairs")
 def _emb_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    if sf not in _EMB_PAIRS_CACHE:
-        from kafka_streams_learning_spark.operators.materialize import materialized
+    from kafka_streams_learning_spark.operators.materialize import materialized
 
-        pairs = similarity.embedding_near_dup_pairs_lsh(
-            load_table(spark, sf, "embeddings"),
-            EMB_DUP_THRESHOLD,
-            bands=NEARDUP_BANDS,
-            planes_per_band=NEARDUP_PPB,
-            dim=EMB_DIM,
-            bucket_cap=NEARDUP_BUCKET_CAP,
-        )
-        # per-sf tag: generations for different sf dirs must not reclaim
-        # each other (the oracle suite runs three SFs in one process)
-        _EMB_PAIRS_CACHE[sf] = materialized(
-            pairs, tag=f"emb-pairs-{sf.replace('/', '_')}"
-        )
-    return _EMB_PAIRS_CACHE[sf]
+    pairs = similarity.embedding_near_dup_pairs_lsh(
+        load_table(spark, sf, "embeddings"),
+        EMB_DUP_THRESHOLD,
+        bands=NEARDUP_BANDS,
+        planes_per_band=NEARDUP_PPB,
+        dim=EMB_DIM,
+        bucket_cap=NEARDUP_BUCKET_CAP,
+    )
+    # per-sf tag: generations for different sf dirs must not reclaim
+    # each other (the oracle suite runs three SFs in one process)
+    return materialized(pairs, tag=f"emb-pairs-{sf.replace('/', '_')}")
 
 
 def _x26(spark: SparkSession, sf: str) -> DataFrame:
@@ -1431,18 +1414,14 @@ KMEANS_ITER = 3
 
 # Lloyd training collects k×d doubles through the driver over n_iter jobs;
 # x35 and x39 train the IDENTICAL model, so one catalog run pays it once
-# (same per-process precedent as the s05 changelog staging cache). Fresh
-# process per round ⇒ the cache can never span a fixture regeneration.
-_CENTROID_CACHE: dict[str, dict[int, list[float]]] = {}
-
-
+# (same per-process precedent as the s05 changelog staging). Fresh
+# process per round ⇒ the model can never span a fixture regeneration.
+@shared_artifact("centroids", model=True)
 def _trained_centroids(spark: SparkSession, sf: str) -> dict[int, list[float]]:
-    if sf not in _CENTROID_CACHE:
-        emb = load_table(spark, sf, "embeddings")
-        _CENTROID_CACHE[sf] = clustering.kmeans_centroids(
-            emb, k=KMEANS_K, n_iter=KMEANS_ITER, dim=EMB_DIM
-        )
-    return _CENTROID_CACHE[sf]
+    emb = load_table(spark, sf, "embeddings")
+    return clustering.kmeans_centroids(
+        emb, k=KMEANS_K, n_iter=KMEANS_ITER, dim=EMB_DIM
+    )
 
 
 def _x35(spark: SparkSession, sf: str) -> DataFrame:
@@ -1863,24 +1842,23 @@ FROM stats LEFT JOIN runs ON stats.doc_id = runs.doc_id
 
 
 # the scored/bucketed table is shared per (process, sf) like the Lloyd
-# centroids (_CENTROID_CACHE): x45 and x47 both consume it, and without
-# the cache each consumer re-trains the unigram LM and re-scores the
-# whole corpus. The cache stores the PATH of a private staging write
-# (never a reclaimable tag generation), so later direct ccnet_buckets
-# calls can't invalidate it.
-_BUCKETS_CACHE: dict[str, str] = {}
+# centroids: x45 and x47 both consume it, and without sharing each
+# consumer re-trains the unigram LM and re-scores the whole corpus. The
+# artifact is the PATH of a private staging write (never a reclaimable
+# tag generation), so later direct ccnet_buckets calls can't invalidate it.
+@shared_artifact("ccnet_buckets")
+def _ccnet_buckets_dir(spark: SparkSession, sf: str) -> str:
+    from kafka_streams_learning_spark.sources.replay import run_staging_dir
+
+    path = run_staging_dir("x45-buckets")
+    textops.ccnet_buckets(
+        load_table(spark, sf, "documents"), LM_VOCAB_SIZE
+    ).write.mode("overwrite").parquet(path)
+    return path
 
 
 def _ccnet_buckets_shared(spark: SparkSession, sf: str) -> DataFrame:
-    if sf not in _BUCKETS_CACHE:
-        from kafka_streams_learning_spark.sources.replay import run_staging_dir
-
-        path = run_staging_dir("x45-buckets")
-        textops.ccnet_buckets(
-            load_table(spark, sf, "documents"), LM_VOCAB_SIZE
-        ).write.mode("overwrite").parquet(path)
-        _BUCKETS_CACHE[sf] = path
-    return spark.read.parquet(_BUCKETS_CACHE[sf])
+    return spark.read.parquet(_ccnet_buckets_dir(spark, sf))
 
 
 def _x45(spark: SparkSession, sf: str) -> DataFrame:
@@ -2807,8 +2785,6 @@ WHERE o_custkey IN (
 
 KMEANS_SAMPLE_MOD = 4
 
-_SAMPLED_CENTROID_CACHE: dict[str, dict[int, list[float]]] = {}
-
 
 def _kmeans_sample_filter():
     from kafka_streams_learning_spark.functions.hashing import hash32
@@ -2820,20 +2796,19 @@ def _kmeans_sample_pred_sql() -> str:
     return f"{hash32_sql('CAST(vec_id AS VARCHAR)')} % {KMEANS_SAMPLE_MOD} = 0"
 
 
+@shared_artifact("sampled_centroids", model=True)
 def _sampled_centroids(spark: SparkSession, sf: str) -> dict[int, list[float]]:
     """The sampled-training k-means model, trained once per process and
     shared by x62 (assignment audit) and x39 (SemDeDup) — the same
     one-model precedent as `_trained_centroids` for x35."""
-    if sf not in _SAMPLED_CENTROID_CACHE:
-        emb = load_table(spark, sf, "embeddings")
-        _SAMPLED_CENTROID_CACHE[sf] = clustering.kmeans_centroids(
-            emb,
-            k=KMEANS_K,
-            n_iter=KMEANS_ITER,
-            dim=EMB_DIM,
-            train_filter=_kmeans_sample_filter(),
-        )
-    return _SAMPLED_CENTROID_CACHE[sf]
+    emb = load_table(spark, sf, "embeddings")
+    return clustering.kmeans_centroids(
+        emb,
+        k=KMEANS_K,
+        n_iter=KMEANS_ITER,
+        dim=EMB_DIM,
+        train_filter=_kmeans_sample_filter(),
+    )
 
 
 def _x62(spark: SparkSession, sf: str) -> DataFrame:
@@ -2988,20 +2963,15 @@ CLS_POSITIVE = ("src0", "src1", "src2", "src3")
 
 # one trained model per sf per process — x67 (batch scoring) and s22
 # (streaming scoring against the batch-frozen model) share the SAME
-# materialized token/weight tables (the _EMB_PAIRS_CACHE attribution
-# contract: the first consumer in catalog order pays training)
-_NB_MODEL_CACHE: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
+# materialized token/weight tables, trained in the bench's set-up
+@shared_artifact("nb_model", model=True)
 def nb_model(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-    if sf not in _NB_MODEL_CACHE:
-        _NB_MODEL_CACHE[sf] = textops.nb_train(
-            load_table(spark, sf, "documents"),
-            positive=F.col("source").isin(*CLS_POSITIVE),
-            n_buckets=textops.CLS_BUCKETS,
-            tag=f"x67-{sf.replace('/', '_')}",
-        )
-    return _NB_MODEL_CACHE[sf]
+    return textops.nb_train(
+        load_table(spark, sf, "documents"),
+        positive=F.col("source").isin(*CLS_POSITIVE),
+        n_buckets=textops.CLS_BUCKETS,
+        tag=f"x67-{sf.replace('/', '_')}",
+    )
 
 
 def _x67(spark: SparkSession, sf: str) -> DataFrame:
@@ -3499,74 +3469,3 @@ EXTENSION_QUERIES: list[QuerySpec] = [
               "canonical blobs (+ corrupted slices) re-parsed by the pure "
               "JVM header parser; oracle replays field derivation"),
 ]
-
-
-def clear_model_caches() -> None:
-    """Drop the per-process TRAINED-MODEL caches (k-means centroids, the
-    sampled-Lloyd variant, the NB token/prior tables) so the next caller
-    re-trains from scratch. Exists for the determinism sweep: sharing the
-    caches across its two sessions verifies assignment reproducibility
-    but lets training itself execute only under the FIRST session's
-    shuffle.partitions (ADVICE r8) — clearing between sessions makes the
-    training path partition-count-swept too. The materialized staging
-    caches (_MH_PAIRS/_EMB_PAIRS/_BUCKETS) are intentionally untouched:
-    they hold session-bound persisted DataFrames reused across catalog
-    rows, and their builder pipelines are plan-audited separately."""
-    _CENTROID_CACHE.clear()
-    _SAMPLED_CENTROID_CACHE.clear()
-    _NB_MODEL_CACHE.clear()
-    # the memoized embeddings count is model-derived state too: x13's
-    # centroid modulus must re-derive alongside the centroids after a
-    # fixture regeneration, or the stale modulus mismatches the oracle's
-    # live-table count (r10 review finding)
-    _IVF_MOD_CACHE.clear()
-
-
-def warm_shared_artifacts(spark: SparkSession, sf: str) -> dict[str, float]:
-    """Eagerly build every cross-query SHARED artifact for ``sf`` and
-    return per-artifact wall seconds (VERDICT r9 item 3). The bench's
-    first-consumer attribution contract — whichever catalog row first
-    touches a shared materialization pays its build — made the movers
-    report cry wolf every time plan edits re-keyed a cache (r9: s24,
-    x61, x63, x14, x67, x47 all jumped with zero code changes). Warming
-    here pins those one-time costs to an explicit, separately-reported
-    setup step, so a per-query regression in BENCH_r*.json is a real
-    regression. Iterates `_SHARED_CACHE_WARMERS`, the one registry every
-    module-level shared cache must appear in (ADVICE r10: the previous
-    hardcoded step list meant a future shared materialization silently
-    reverted to first-consumer attribution; a test now sweeps this
-    module for `*_CACHE` globals and asserts registry coverage)."""
-    import time as _time
-
-    out: dict[str, float] = {}
-    for name, (_cache, fn) in _SHARED_CACHE_WARMERS.items():
-        t0 = _time.time()
-        fn(spark, sf)
-        out[name] = round(_time.time() - t0, 3)
-    return out
-
-
-# One registry for every module-level shared cache: step label ->
-# (cache global name, warmer). `warm_shared_artifacts` iterates it and
-# `tests/test_operators.py::test_every_shared_cache_has_a_warmup_step`
-# asserts every `*_CACHE` dict defined in this module is claimed by
-# exactly one entry — adding a shared materialization without a warm
-# step is a test failure, not a silent bench-attribution regression.
-_SHARED_CACHE_WARMERS: dict[str, tuple[str, object]] = {
-    "mh_pairs": ("_MH_PAIRS_CACHE", lambda spark, sf: _mh_pairs(spark, sf)),
-    "emb_pairs": ("_EMB_PAIRS_CACHE", lambda spark, sf: _emb_pairs(spark, sf)),
-    "centroids": (
-        "_CENTROID_CACHE", lambda spark, sf: _trained_centroids(spark, sf)
-    ),
-    "sampled_centroids": (
-        "_SAMPLED_CENTROID_CACHE",
-        lambda spark, sf: _sampled_centroids(spark, sf),
-    ),
-    "ivf_mod": (
-        "_IVF_MOD_CACHE", lambda spark, sf: _ivf_centroid_mod(spark, sf)
-    ),
-    "ccnet_buckets": (
-        "_BUCKETS_CACHE", lambda spark, sf: _ccnet_buckets_shared(spark, sf)
-    ),
-    "nb_model": ("_NB_MODEL_CACHE", lambda spark, sf: nb_model(spark, sf)),
-}

@@ -304,43 +304,29 @@ def replay_stream(
     )
 
 
-def replay_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    staging_dir: str,
-    chunks: int = 4,
-    order_by: str = "ts",
-) -> DataFrame:
-    """Fixture table → event-time-ordered replay stream."""
-    df = load_table(spark, sf_dir, name)
-    stage_replay_chunks(df, staging_dir, chunks, order_by)
-    return replay_stream(spark, staging_dir, df.schema)
-
-
 _SHARED_STAGED: dict[tuple, str] = {}
 
 
-def shared_replay_table(
+def shared_replay_staging(
     spark: SparkSession,
     sf_dir: str,
     name: str,
     chunks: int = 4,
     order_by: str = "ts",
     columns: tuple[str, ...] | None = None,
-    files_per_trigger: int = 1,
-) -> DataFrame:
-    """`replay_table`, but the staged chunks are cached per
-    (sf_dir, table, chunks, order_by) for the life of the process.
+) -> tuple[str, object]:
+    """Stage a fixture table as event-time-ordered replay chunks, cached per
+    (sf_dir, table, chunks, order_by, columns) for the life of the
+    process; returns (staging_dir, schema).
 
     Staging is a global sort plus one parquet write partitioned by
     chunk — the most expensive part of replaying a small fixture — and
     the staged files are immutable once written (queries that append
-    flush-sentinel chunks use a PRIVATE `replay_table` staging instead).
-    Each query still gets its own checkpoint dir, so the file-source
-    offsets never collide; only the input files are reused. A
-    catalog/bench run that replays `events` for six different streaming
-    queries pays the sort once.
+    flush-sentinel rows stage a PRIVATE copy instead). Each query still
+    gets its own checkpoint dir, so the file-source offsets never
+    collide; only the input files are reused. A catalog/bench run that
+    replays `events` for eight different streaming queries pays the sort
+    once.
 
     `columns` projects the staged files to just those columns (must
     include `order_by`): a wide fact replayed by a query that reads four
@@ -356,4 +342,21 @@ def shared_replay_table(
         path = run_staging_dir("replay")
         stage_replay_chunks(df, path, chunks, order_by)
         _SHARED_STAGED[key] = path
-    return replay_stream(spark, path, df.schema, files_per_trigger=files_per_trigger)
+    return path, df.schema
+
+
+def shared_replay_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    chunks: int = 4,
+    order_by: str = "ts",
+    columns: tuple[str, ...] | None = None,
+    files_per_trigger: int = 1,
+) -> DataFrame:
+    """Fixture table → event-time-ordered replay stream over the shared
+    staging (`shared_replay_staging`)."""
+    path, schema = shared_replay_staging(
+        spark, sf_dir, name, chunks, order_by, columns
+    )
+    return replay_stream(spark, path, schema, files_per_trigger=files_per_trigger)

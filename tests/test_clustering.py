@@ -182,12 +182,13 @@ def test_kmeans_sampled_training_assigns_full_corpus(spark):
 
 def test_x39_and_x62_share_one_sampled_model(spark):
     """x39's SemDeDup and x62's assignment audit must train ONE sampled
-    k-means model per (process, sf): the cache is keyed by sf and both
-    catalog rows resolve through _sampled_centroids."""
+    k-means model per (process, sf): the shared artifact is keyed by sf
+    and both catalog rows resolve through _sampled_centroids."""
     from kafka_streams_learning_spark import catalog_ext as X
+    from kafka_streams_learning_spark.catalog import clear_model_caches
 
     sf = "/root/testdata/sf0.001"
-    X._SAMPLED_CENTROID_CACHE.pop(sf, None)
+    clear_model_caches()
     m1 = X._sampled_centroids(spark, sf)
     assert X._sampled_centroids(spark, sf) is m1  # cache hit, no retrain
     # and the model is the sampled-training one: it differs from the

@@ -541,28 +541,89 @@ def test_streaming_ingest_continuous_poller(spark, tmp_path):
     ) == [1, 2]
 
 
-def test_bench_warm_steps_idempotent(spark):
-    """The bench setup step (shared artifacts + private stagings) is
-    callable, returns per-step seconds, and is idempotent: a second call
-    hits every cache, so no step re-pays its build (VERDICT r9 item 3 —
-    setup must be pinnable without changing any query's result)."""
+def test_shared_artifact_rebuilds_gone_staging_and_clears_models(tmp_path):
+    """The registry's two rules: an entry whose staging directory is gone
+    is rebuilt on its next use, and `clear_model_caches` drops only the
+    `model=True` entries."""
+    import shutil
+
+    from kafka_streams_learning_spark import catalog
+
+    builds: list[str] = []
+
+    def build_staging(spark, sf):
+        d = tmp_path / f"stage{len(builds)}"
+        d.mkdir()
+        builds.append(str(d))
+        return str(d), len(builds)
+
+    try:
+        stage = catalog.shared_artifact("test_staging")(build_staging)
+        model = catalog.shared_artifact("test_model", model=True)(
+            lambda spark, sf: object()
+        )
+        first = stage(None, "sf")
+        assert stage(None, "sf") == first  # memo hit
+        shutil.rmtree(first[0])
+        assert stage(None, "sf") == (builds[1], 2)  # gone → rebuilt
+        m = model(None, "sf")
+        assert model(None, "sf") is m
+        catalog.clear_model_caches()
+        assert model(None, "sf") is not m
+        assert stage(None, "sf") == (builds[1], 2)  # stagings stay
+    finally:
+        catalog._ARTIFACTS.pop("test_staging", None)
+        catalog._ARTIFACTS.pop("test_model", None)
+
+
+def test_warm_setup_idempotent(spark):
+    """The bench set-up step (`catalog.warm_setup`) is callable, returns
+    per-artifact seconds under every declared label, and is idempotent:
+    a second call hits every entry, so no artifact re-pays its build
+    (VERDICT r9 item 3 — setup must be pinnable without changing any
+    query's result)."""
     import time
 
-    from kafka_streams_learning_spark.catalog_ext import warm_shared_artifacts
-    from kafka_streams_learning_spark.catalog_streaming import (
-        warm_streaming_stagings,
-    )
+    from kafka_streams_learning_spark.catalog import warm_setup
 
-    sf = "/root/testdata/sf0.001"
-    first = {**warm_shared_artifacts(spark, sf), **warm_streaming_stagings(spark, sf)}
+    from .conftest import SF_DIR as sf
+    first = warm_setup(spark, sf)
     assert set(first) >= {
         "mh_pairs", "emb_pairs", "centroids", "sampled_centroids",
         "ivf_mod", "ccnet_buckets", "nb_model",
-        "s05_changelog", "s07_staging", "s12_staging", "s20_staging",
-        "s23_staging",
+        "s05_changelog", "s07_staging", "s12_s20_staging", "s23_staging",
+        "events_replay", "documents_replay", "orders_replay",
+        "s04_orders_replay", "s04_lineitem_replay", "s24_lineitem_replay",
     }
     t0 = time.time()
-    second = {**warm_shared_artifacts(spark, sf), **warm_streaming_stagings(spark, sf)}
+    second = warm_setup(spark, sf)
     warm_total = time.time() - t0
+    assert set(second) == set(first)
     # warm pass = pure cache hits; generous bound to stay CI-stable
     assert warm_total < 5.0, f"warm pass re-paid a build: {second}"
+
+
+def test_warm_setup_stages_every_staging_row_input(spark):
+    """After `warm_setup`, the staging s-rows build no replay input of
+    their own: no new `replay-`/`chlog-` staging directory appears while
+    they run, so the bench's timed rows measure the engine and not a
+    sort + chunked write that the set-up step skipped."""
+    from kafka_streams_learning_spark.catalog import all_queries, warm_setup
+    from kafka_streams_learning_spark.sources.replay import run_staging_dir
+
+    from .conftest import SF_DIR as sf
+    root = os.path.dirname(run_staging_dir("probe"))
+
+    def stagings() -> set[str]:
+        return {
+            d for d in os.listdir(root) if d.startswith(("replay-", "chlog-"))
+        }
+
+    warm_setup(spark, sf)
+    before = stagings()
+    rows = ("s01", "s04", "s05", "s07", "s08", "s11", "s12", "s20", "s23", "s24")
+    specs = [q for q in all_queries() if q.name.split("_")[0] in rows]
+    assert len(specs) == len(rows)
+    for spec in specs:
+        spec.spark(spark, sf).count()
+    assert stagings() == before, sorted(stagings() - before)

@@ -1203,7 +1203,7 @@ def test_streaming_gk_quantiles_track_exact(spark, tmpdir):
     dashboards (exact streaming percentiles buffer values per key)."""
     from kafka_streams_learning_spark.operators import core
     from kafka_streams_learning_spark.sources.batch import load_table
-    from kafka_streams_learning_spark.sources.replay import replay_table
+    from kafka_streams_learning_spark.sources.replay import shared_replay_table
 
     from .conftest import SF_DIR
 
@@ -1215,7 +1215,7 @@ def test_streaming_gk_quantiles_track_exact(spark, tmpdir):
             orders, "o_totalprice", qs, "o_orderpriority"
         ).collect()
     }
-    stream = replay_table(spark, SF_DIR, "orders", tmpdir, 4, order_by="o_orderdate")
+    stream = shared_replay_table(spark, SF_DIR, "orders", 4, order_by="o_orderdate")
     approx = core.approx_quantile_stats(stream, "o_totalprice", qs, "o_orderpriority")
     runner.run_to_memory(approx, "s11_gk_out", "complete")
     got = {r.o_orderpriority: r for r in spark.table("s11_gk_out").collect()}
@@ -1729,9 +1729,9 @@ def test_state_budget_guard_fails_loudly(spark, tmpdir):
     rows = [[(u, 100 + u, base + dt.timedelta(minutes=u)) for u in range(50)]]
     stage_explicit_chunks(spark, rows, schema, tmpdir)
     stream = replay_stream(spark, tmpdir, schema)
-    # budget is PER SHARD: 50 users spread over 32 shards leave only a
-    # couple of 8-byte buffer entries per shard, so the forced budget
-    # must sit below one entry pair
+    # budget is PER SHARD: 50 users spread over STATE_SHARDS (8) shards
+    # leave a handful of 8-byte buffer entries per shard, so the forced
+    # budget must sit below one entry pair
     out = stateful.sliding_count_stream(
         stream, 60 * 60 * 1_000_000, _max_state_bytes=8
     )

@@ -238,36 +238,14 @@ def main() -> int:
     canary_spec = by_name[CANARY_ROW]
 
     # identical setup split to bench.py so both passes are steady-state
-    from kafka_streams_learning_spark.catalog_ext import warm_shared_artifacts
-    from kafka_streams_learning_spark.catalog_streaming import (
-        REPLAY_CHUNKS,
-        S24_LINEITEM_COLS,
-        warm_streaming_stagings,
-    )
+    from kafka_streams_learning_spark.catalog import warm_setup
     from kafka_streams_learning_spark.sources.batch import load_table
-    from kafka_streams_learning_spark.sources.replay import shared_replay_table
 
     t_setup0 = time.time()
     load_table(spark, sf_dir, "events").limit(1000).write.format("noop").mode(
         "overwrite"
     ).save()
-    shared_replay_table(spark, sf_dir, "events", REPLAY_CHUNKS)
-    shared_replay_table(spark, sf_dir, "documents", REPLAY_CHUNKS, order_by="doc_id")
-    shared_replay_table(spark, sf_dir, "orders", REPLAY_CHUNKS, order_by="o_orderdate")
-    shared_replay_table(
-        spark, sf_dir, "orders", REPLAY_CHUNKS, order_by="o_orderdate",
-        columns=("o_orderkey", "o_custkey", "o_orderdate"),
-    )
-    shared_replay_table(
-        spark, sf_dir, "lineitem", REPLAY_CHUNKS, order_by="l_shipdate",
-        columns=("l_orderkey", "l_linenumber", "l_extendedprice", "l_shipdate"),
-    )
-    shared_replay_table(
-        spark, sf_dir, "lineitem", REPLAY_CHUNKS, order_by="l_shipdate",
-        columns=S24_LINEITEM_COLS,
-    )
-    warm_shared_artifacts(spark, sf_dir)
-    warm_streaming_stagings(spark, sf_dir)
+    warm_setup(spark, sf_dir)
     setup_seconds = round(time.time() - t_setup0, 3)
 
     canary_stage = _stage_stream_canary(spark)

@@ -12,8 +12,9 @@ moves first-touch costs between rows.
 
 Same measurement discipline as bench.py: noop batch sink (executors do
 the work, nothing collects), cache cleared between queries so one row's
-cache pressure cannot tax the next, shared replay fixtures pre-staged in
-the warmup so neither pass absorbs them twice.
+cache pressure cannot tax the next, JVM warmed before either pass. The
+shared set-up (`catalog.warm_setup`) is deliberately NOT built first: the
+cold pass is where its first-touch costs land.
 """
 
 from __future__ import annotations

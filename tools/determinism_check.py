@@ -44,7 +44,7 @@ def main() -> int:
         s.conf.set("spark.sql.shuffle.partitions", p)
         sessions.append(s)
 
-    # Trained-model caches (k-means centroids, NB model) are CLEARED at
+    # Trained models (the `model=True` shared artifacts) are CLEARED at
     # the start of each session's pass so model TRAINING executes under
     # both parallelisms, not just the first (ADVICE r8: sharing them
     # verified assignment reproducibility but never swept training
@@ -52,7 +52,7 @@ def main() -> int:
     # across its consumer rows, exactly as a real catalog run does. The
     # materialized staging caches (LSH pair buckets etc.) stay shared —
     # session-bound persisted frames whose builders are plan-audited.
-    from kafka_streams_learning_spark.catalog_ext import clear_model_caches
+    from kafka_streams_learning_spark.catalog import clear_model_caches
 
     specs = REFERENCE_QUERIES + EXTENSION_QUERIES
     per_session: list[dict[str, tuple[int, str]]] = []

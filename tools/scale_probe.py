@@ -62,16 +62,14 @@ def main() -> int:
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet")) \
             .limit(100).write.format("noop").mode("overwrite").save()
         if warm_stagings:
-            # pre-pay replay stagings (sort + chunked write of the input
-            # table — bench-setup scaffolding, not engine work) so the
-            # growth ratio measures the streaming ENGINE's scaling; the
-            # unwarmed run measures staging+engine together
-            from kafka_streams_learning_spark.catalog_streaming import (
-                warm_streaming_stagings,
-            )
+            # pre-pay the bench set-up (replay stagings, models, shared
+            # materializations — scaffolding, not engine work) so the
+            # growth ratio measures the ENGINE's scaling; the unwarmed run
+            # measures set-up+engine together
+            from kafka_streams_learning_spark.catalog import warm_setup
 
-            detail = warm_streaming_stagings(spark, sf_dir)
-            print(f"# {sf_name} stagings warmed: {detail}", flush=True)
+            detail = warm_setup(spark, sf_dir)
+            print(f"# {sf_name} set-up warmed: {detail}", flush=True)
         timings: dict[str, float] = {}
         for name in rows:
             t0 = time.time()

@@ -119,9 +119,11 @@ def check_split_parity(spark) -> dict:
     split forced vs not; emitted rows must match exactly."""
     from pyspark.sql import functions as F
 
+    from kafka_streams_learning_spark.sources.batch import load_table
     from kafka_streams_learning_spark.sources.replay import (
-        replay_table,
+        replay_stream,
         run_staging_dir,
+        stage_replay_chunks,
     )
     from kafka_streams_learning_spark.streaming import runner, stateful
 
@@ -133,6 +135,10 @@ def check_split_parity(spark) -> dict:
         src.slice(0, sample_rows),
         os.path.join(sample_dir, "events.parquet"),
     )
+    # both variants replay the same staged chunks
+    sample = load_table(spark, sample_dir, "events")
+    staged = run_staging_dir("skewstage")
+    stage_replay_chunks(sample, staged, 4, "ts")
 
     results = {}
     for op_name, build in (
@@ -154,10 +160,7 @@ def check_split_parity(spark) -> dict:
     ):
         outs = []
         for mc in (2**62, SPLIT_MC):
-            stream = replay_table(
-                spark, sample_dir, "events",
-                run_staging_dir("skewstage"), chunks=4, order_by="ts",
-            )
+            stream = replay_stream(spark, staged, sample.schema)
             out = build(stream, mc)
             name = f"skewprobe_{op_name}_{'split' if mc != 2**62 else 'full'}"
             runner.run_to_memory(out, name, "append", state_partitions=8)
