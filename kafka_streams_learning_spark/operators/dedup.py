@@ -30,6 +30,7 @@ from kafka_streams_learning_spark.functions.text import word_shingles
 from kafka_streams_learning_spark.operators.materialize import (
     materialized as _materialized,
 )
+from kafka_streams_learning_spark.sources.batch import fan_out
 
 SIMHASH_BITS = 32
 
@@ -46,9 +47,11 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
 
 def _shingled(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(id, shingle) postings, distinct per document."""
+    """(id, shingle) postings, distinct per document, from the fanned-out
+    scan: the distinct rides its hash partitioning on the id."""
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(word_shingles(F.col(text_col), k)).alias("shingle"))
+        fan_out(df, id_col)
+        .select(F.col(id_col).alias("id"), F.explode(word_shingles(F.col(text_col), k)).alias("shingle"))
         .distinct()
     )
 
@@ -268,36 +271,33 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     half of the document's tokens (by term frequency) have bit b set in
     their 32-bit hash. Docs with no tokens get simhash 0.
 
-    Shape: a shuffle-free per-row pass. The token-hash array is
-    materialized in its OWN projection and referenced by all 32 bit
-    aggregates — CollapseProject refuses to inline a non-cheap expression
-    referenced more than once, so the md5 runs exactly once per token
-    (inlining it naively re-evaluates the hash inside every aggregate;
-    explode+groupBy avoids that too but adds a shuffle + re-join and
-    measured ~1.6x slower). `.explain("formatted")` shows one md5, zero
-    Exchanges."""
+    Shape: a per-row pass over the fanned-out scan (`fan_out`: one hash
+    exchange on the doc id when the input has fewer row groups than
+    cores, none otherwise). The token-hash array is materialized in its
+    OWN projection and referenced by all 32 bit aggregates —
+    CollapseProject refuses to inline a non-cheap expression referenced
+    more than once, so the md5 runs exactly once per token (inlining it
+    naively re-evaluates the hash inside every aggregate; explode+groupBy
+    avoids that too but adds a shuffle + re-join and measured ~1.6x
+    slower). `.explain("formatted")` shows one md5.
+
+    The 32 bit terms are one SQL expression, generated like the
+    `_simhash_sql` oracle: one parse in the JVM, where Column lambdas
+    cost a py4j round trip per node (~6,000 per DataFrame)."""
     from kafka_streams_learning_spark.functions.hashing import hash32
 
-    hashed = df.select(
+    hashed = fan_out(df, id_col).select(
         F.col(id_col),
         F.transform(
             T.tokens(T.normalized_text(F.col(text_col))), lambda t: hash32(t)
         ).alias("_h"),
     )
-    n = F.size(F.col("_h"))
-
-    def _bit_counter(bit: int):
-        # binary lambda required by F.aggregate's merge step; the bit index
-        # must come in via closure, not a default arg (arity detection)
-        return lambda acc, h: acc + F.shiftright(h, bit).bitwiseAND(F.lit(1))
-
-    bit_terms = []
-    for b in range(SIMHASH_BITS):
-        ones = F.aggregate(F.col("_h"), F.lit(0).cast("long"), _bit_counter(b))
-        bit_terms.append(
-            F.when(ones * 2 >= n, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    value = F.when(n == 0, F.lit(0).cast("long")).otherwise(sum(bit_terms[1:], bit_terms[0]))
+    bit_terms = " + ".join(
+        f"CASE WHEN aggregate(_h, 0L, (acc, h) -> acc + (shiftright(h, {b}) & 1))"
+        f" * 2 >= size(_h) THEN {2**b}L ELSE 0L END"
+        for b in range(SIMHASH_BITS)
+    )
+    value = F.expr(f"CASE WHEN size(_h) = 0 THEN 0L ELSE {bit_terms} END")
     return hashed.select(F.col(id_col), value.alias("simhash"))
 
 

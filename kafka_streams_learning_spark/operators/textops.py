@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_learning_spark.functions import text as T
+from kafka_streams_learning_spark.sources.batch import fan_out
 
 
 def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -126,7 +127,7 @@ def tfidf_topk(
     its local top-k per doc before the final exchange."""
     from pyspark.sql import Window
 
-    toks = df.select(
+    toks = fan_out(df, id_col).select(
         F.col(id_col),
         F.explode(T.tokens(T.normalized_text(F.col(text_col)))).alias("term"),
     )
@@ -658,7 +659,7 @@ def bm25_topk(
     terms_lit = F.array(*[F.lit(t) for t in sorted({t for _, t in q_rows})])
 
     base = materialized(
-        df.select(
+        fan_out(df, id_col).select(
             F.col(id_col),
             T.tokens(T.normalized_text(F.col(text_col))).alias("toks"),
         ).select(

@@ -47,10 +47,20 @@ def has_cartesian(df: DataFrame) -> bool:
     return plan_has(df, "CartesianProduct")
 
 
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the plan (lower = fewer full-network
-    round trips; the scale killer to watch). Broadcast exchanges are NOT
-    counted — broadcasting the small side is the point."""
+def exchanges(df: DataFrame) -> list[str]:
+    """The `Arguments:` line of each shuffle exchange in the plan (its
+    partitioning and origin, e.g. `hashpartitioning(doc_id#3L, 4),
+    REPARTITION_BY_NUM, [plan_id=7]`). Broadcast exchanges are NOT
+    listed — broadcasting the small side is the point."""
     import re
 
-    return len(re.findall(r"\(\d+\) Exchange\b", formatted_plan(df)))
+    return re.findall(
+        r"\(\d+\) Exchange\n(?:(?!\(\d+\) ).*\n)*?Arguments: (.*)",
+        formatted_plan(df),
+    )
+
+
+def exchange_count(df: DataFrame) -> int:
+    """Number of shuffle exchanges in the plan (lower = fewer full-network
+    round trips; the scale killer to watch)."""
+    return len(exchanges(df))

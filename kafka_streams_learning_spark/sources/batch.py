@@ -11,6 +11,7 @@ DataFrame rather than in Python.
 from __future__ import annotations
 
 from functools import lru_cache
+from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +68,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in _nanos_ts_columns(path):
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
     return df
+
+
+@lru_cache(maxsize=256)
+def _row_groups(path: str) -> int:
+    """Parquet row groups in one file, from its footer."""
+    return pq.ParquetFile(path).metadata.num_row_groups
+
+
+def fan_out(df: DataFrame, id_col: str) -> DataFrame:
+    """Hash-partition a local scan with fewer parquet row groups than
+    cores on `id_col`, so its per-row kernels run on every core; return
+    `df` unchanged otherwise (non-local files, no input files, or a scan
+    that already has a task per core).
+
+    Row groups, not files or byte splits, count the tasks that do work: a
+    split holding no row group's midpoint reads nothing. Hashing on the
+    id (not round-robin) makes the partitioning satisfy the per-id
+    `distinct`/`groupBy`/`Window.partitionBy` that follow, so those
+    exchanges drop out. Not done in `load_table`: fanning out every scan
+    made the x-block slower (ROADMAP direction 2)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if not files or not all(f.startswith("file:") for f in files):
+        return df
+    if sum(_row_groups(unquote(urlparse(f).path)) for f in files) >= n:
+        return df
+    return df.repartition(n, F.col(id_col))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

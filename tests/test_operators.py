@@ -1790,6 +1790,18 @@ def test_bench_paired_classification_table():
     assert unstable2 == [] and movers2 == []
 
 
+def test_bench_paired_uses_warm_bands_only_at_their_scale():
+    # an sf0.001 run compared with sf0.1 bands flagged x47 as a real mover
+    from tools.bench_paired import classify_pair, warm_band_at
+
+    warm = {"sf": 0.1, "queries": {"x47": [1.0, 0.815]}}
+    bands, note = warm_band_at(warm, 0.1)
+    assert bands == warm["queries"] and note is None
+    bands, note = warm_band_at(warm, 0.001)
+    assert bands == {} and "sf0.1" in note and "sf0.001" in note
+    assert classify_pair({"x47": 1.85}, {"x47": 2.06}, bands, True) == ([], [])
+
+
 def test_bench_paired_host_clean_requires_both_canaries():
     """VERDICT r13 item 3: host_clean must gate on the streaming canary
     too — the r13 batch canary read clean (0.195/0.185/0.172) through a

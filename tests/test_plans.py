@@ -20,6 +20,18 @@ def _df(spark, name):
     return _BY_NAME[name].spark(spark, SF_DIR)
 
 
+def _write_row_groups(out_dir, n_groups: int) -> str:
+    """A copy of the fixture documents split into `n_groups` parquet row
+    groups (the layout of a scan at scale); returns its path."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/documents.parquet")
+    path = f"{out_dir}/documents.parquet"
+    pq.write_table(t, path, row_group_size=-(-t.num_rows // n_groups))
+    assert pq.ParquetFile(path).metadata.num_row_groups == n_groups
+    return path
+
+
 def test_filter_pushdown_reaches_scan(spark):
     # the threshold comparison must reach the parquet reader, not run post-scan
     pf = E.pushed_filters(_df(spark, "q02_high_value_filter"))
@@ -166,9 +178,89 @@ def test_asof_join_has_no_join_operator(spark):
         "x23_pii_redaction",
     ],
 )
-def test_expression_only_ops_have_no_shuffle(spark, name):
+def test_expression_only_ops_have_no_shuffle(spark, name, tmp_path):
     # per-row expression operators must be shuffle-free single passes
-    assert E.exchange_count(_df(spark, name)) == 0, name
+    if name != "x08_simhash":
+        assert E.exchange_count(_df(spark, name)) == 0, name
+        return
+    # SimHash fans a scan with fewer row groups than cores out on the doc
+    # id (sources.batch.fan_out), so the one-row-group fixture plans
+    # exactly that one exchange, below the single md5; an input with a
+    # row group per core — the shape of every scan at scale — plans none
+    df = _df(spark, name)
+    plan = E.formatted_plan(df)
+    (ex,) = E.exchanges(df)
+    assert ex.startswith("hashpartitioning(doc_id#") and "REPARTITION_BY_NUM" in ex
+    assert plan.count("md5(") == 1
+    # formatted details list children before parents
+    assert plan.index("Arguments: hashpartitioning") < plan.index("md5(")
+    _write_row_groups(tmp_path, spark.sparkContext.defaultParallelism)
+    assert E.exchange_count(_BY_NAME[name].spark(spark, str(tmp_path))) == 0
+
+
+def test_fan_out_hash_partitions_a_scan_with_fewer_row_groups_than_cores(
+    spark, tmp_path
+):
+    from kafka_streams_learning_spark.sources.batch import fan_out, load_table
+
+    n = spark.sparkContext.defaultParallelism
+    for groups, fans_out in ((n - 1, True), (n, False)):
+        d = tmp_path / str(groups)
+        d.mkdir()
+        _write_row_groups(d, groups)
+        df = load_table(spark, str(d), "documents")
+        out = fan_out(df, "doc_id")
+        if fans_out:
+            (ex,) = E.exchanges(out)
+            assert ex.startswith("hashpartitioning(doc_id#") and f", {n}), " in ex
+            assert "REPARTITION_BY_NUM" in ex
+        else:
+            # the same DataFrame, so the same physical plan
+            assert out is df and E.exchange_count(out) == 0
+
+
+def test_fan_out_leaves_non_local_and_fileless_inputs_alone(spark):
+    from kafka_streams_learning_spark.sources.batch import fan_out, load_table
+
+    remote = load_table(spark, SF_DIR, "documents")
+    # a footer read of this path would raise: the scheme check comes first
+    remote.inputFiles = lambda: ["s3a://corpus/documents.parquet"]
+    assert fan_out(remote, "doc_id") is remote
+    made = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    assert fan_out(made, "doc_id") is made
+
+
+def test_per_document_kernels_reuse_the_fan_out_partitioning(spark):
+    # hashing the fan-out on the doc id satisfies the per-document
+    # operators above it: x07's postings distinct and x21's (doc, term)
+    # aggregate and per-doc window plan no exchange of their own
+    from kafka_streams_learning_spark.operators import dedup
+    from kafka_streams_learning_spark.sources.batch import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    (ex,) = E.exchanges(dedup._shingled(docs, "text", "doc_id", 3))
+    assert "REPARTITION_BY_NUM" in ex
+    x21 = E.exchanges(_df(spark, "x21_tfidf_topk"))
+    assert any("REPARTITION_BY_NUM" in e for e in x21)
+    assert not [e for e in x21 if "doc_id#" in e and "REPARTITION_BY_NUM" not in e]
+
+
+def test_simhash_builds_in_few_jvm_round_trips(spark, monkeypatch):
+    # the 32 bit terms are one SQL expression: built from Column lambdas
+    # they took ~6,000 py4j round trips per DataFrame
+    from py4j.clientserver import ClientServerConnection
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    _df(spark, "x08_simhash")
+    monkeypatch.undo()
+    assert 0 < len(calls) < 500
 
 
 def test_rollup_is_one_scan_one_shuffle(spark):

@@ -29,7 +29,9 @@ Verdict classification for a driver-run row that moved vs last round:
 
 Usage: python tools/bench_paired.py            (writes BENCH_PAIRED.json)
 Exit 1 if any row is a real mover (stable pair >1.5x above its warm-band
-reference), so a round-close check can gate on it.
+reference), so a round-close check can gate on it. Bands recorded at
+another scale factor than the run's are not used: such a run reports no
+movers and says why (`warm_band_note`).
 """
 
 from __future__ import annotations
@@ -215,6 +217,18 @@ def classify_pair(
     return sorted(unstable), sorted(real_movers)
 
 
+def warm_band_at(warm: dict, sf: float) -> tuple[dict[str, list], str | None]:
+    """BENCH_WARM.json's per-row bands if they were recorded at the run's
+    scale factor, else none, with the reason: a row's time at another
+    scale says nothing about whether it moved."""
+    if warm.get("sf") != sf:
+        return {}, (
+            f"BENCH_WARM.json bands are at sf{warm.get('sf')}, this run is at "
+            f"sf{sf}: no real movers classified"
+        )
+    return warm["queries"], None
+
+
 def _full_pass(spark, sf_dir, specs) -> dict[str, float]:
     timings: dict[str, float] = {}
     for spec in specs:
@@ -241,10 +255,12 @@ def main() -> int:
     from kafka_streams_learning_spark.catalog import warm_setup
     from kafka_streams_learning_spark.sources.batch import load_table
 
-    t_setup0 = time.time()
     load_table(spark, sf_dir, "events").limit(1000).write.format("noop").mode(
         "overwrite"
     ).save()
+    # like bench.py, the set-up clock times warm_setup only, not the JVM
+    # warm-up above
+    t_setup0 = time.time()
     warm_setup(spark, sf_dir)
     setup_seconds = round(time.time() - t_setup0, 3)
 
@@ -266,10 +282,11 @@ def main() -> int:
     host_clean = window_clean and symmetric
 
     warm_band: dict[str, list[float]] = {}
+    band_note = "no BENCH_WARM.json: no real movers classified"
     warm_path = os.path.join(here, "BENCH_WARM.json")
     if os.path.exists(warm_path):
         with open(warm_path) as f:
-            warm_band = json.load(f)["queries"]
+            warm_band, band_note = warm_band_at(json.load(f), sf)
 
     unstable, real_movers = classify_pair(run_a, run_b, warm_band, host_clean)
 
@@ -311,6 +328,7 @@ def main() -> int:
         "run_b": run_b,
         "unstable_rows": unstable,
         "real_movers": real_movers,
+        "warm_band_note": band_note,
         "driver_memory": spark.conf.get("spark.driver.memory", "unset"),
         "sf": sf,
     }
@@ -322,6 +340,7 @@ def main() -> int:
         "pair_ratio": out["pair_total_ratio"], "host_clean": host_clean,
         "total_a": out["total_a"], "total_b": out["total_b"],
         "unstable": len(unstable), "real_movers": sorted(real_movers),
+        "warm_band_note": band_note,
     }, separators=(",", ":")))
     return 1 if real_movers else 0
 

@@ -45,9 +45,11 @@ SHOWCASE: dict[str, str] = {
         "unshuffled — the property that makes enrichment free at 100 TB."
     ),
     "x08_simhash": (
-        "Zero Exchanges and a single `md5` in the plan: the token-hash array "
-        "is materialized once in its own projection and 32 bit-aggregates "
-        "read it inside one WholeStageCodegen span."
+        "A single `md5` in the plan: the token-hash array is materialized "
+        "once in its own projection and 32 bit-aggregates read it inside one "
+        "WholeStageCodegen span. The one Exchange is the doc-id fan-out "
+        "(`hashpartitioning(doc_id, cores), REPARTITION_BY_NUM`) of a scan "
+        "with fewer parquet row groups than cores; at scale there is none."
     ),
     "x13_ann_ivf_topk": (
         "Centroids and probe set broadcast (BroadcastNestedLoopJoin / "
