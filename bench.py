@@ -132,6 +132,29 @@ def format_bench_line(
     return line
 
 
+def time_row(spark, sf_dir: str, spec) -> float:
+    """Wall seconds of one catalog row, timed the one way every bench tool
+    times a row: construction + execution into the noop sink (streaming
+    rows run their query during construction; batch rows build lazily and
+    execute in the write, which unlike `.count()` prunes no projection).
+    Afterwards the row's state is released so the next row starts clean:
+    persisted intermediates (LSH buckets, shingle postings), so cache
+    pressure from one row can't tax the next one's timing, and the
+    memory-sink result tables (all named <row>_out_<uuid>) — at sf0.1
+    they are small, but accumulating every s-row's sink in one session
+    scales with SF: at the r12 sf1/skew runs the accumulated sinks drove
+    the JVM to ~27 GB RES and livelocked Arrow input serialization in
+    direct-buffer GC-thrash."""
+    t0 = time.time()
+    spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    took = round(time.time() - t0, 3)
+    spark.catalog.clearCache()
+    for t in spark.catalog.listTables():
+        if t.isTemporary and "_out_" in t.name:
+            spark.catalog.dropTempView(t.name)
+    return took
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -160,26 +183,7 @@ def main() -> None:
     setup_detail = warm_setup(spark, sf_dir)
     setup_seconds = round(time.time() - t_setup0, 3)
 
-    timings: dict[str, float] = {}
-    for spec in all_queries():
-        # time construction + execution: streaming specs (s*) run their
-        # query during construction; batch specs build lazily and execute
-        # in the noop write
-        t0 = time.time()
-        df = spec.spark(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[spec.name] = round(time.time() - t0, 3)
-        # free persisted intermediates (LSH buckets, shingle postings) so
-        # cache pressure from one query can't tax the next one's timing
-        spark.catalog.clearCache()
-        # release memory-sink result tables (all named <row>_out_<uuid>):
-        # at sf0.1 they are small, but accumulating every s-row's sink in
-        # one session scales with SF — at the r12 sf1/skew runs the
-        # accumulated sinks drove the JVM to ~27 GB RES and livelocked
-        # Arrow input serialization in direct-buffer GC-thrash
-        for t in spark.catalog.listTables():
-            if t.isTemporary and "_out_" in t.name:
-                spark.catalog.dropTempView(t.name)
+    timings = {spec.name: time_row(spark, sf_dir, spec) for spec in all_queries()}
 
     total = round(sum(timings.values()), 3)
     # Metric semantics (VERDICT r10 item 2 / ADVICE r10): `value` is the

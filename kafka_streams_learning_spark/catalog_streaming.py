@@ -425,6 +425,18 @@ SESSION_GAP_S07 = "12 hours"
 # the bench's set-up, so the timed row measures the engine.
 
 
+def _sentinel_row(spark: SparkSession, schema, *values) -> DataFrame:
+    """A one-row frame of `values` typed and named by `schema`: a flush
+    sentinel to union into a staging. It is a literal projection over
+    `spark.range(1)`; a one-row `createDataFrame` is a parallelized
+    Python RDD, which made each sentinel staging several times slower
+    than a plain replay staging of the same table."""
+    return spark.range(1).select(
+        *(F.lit(v).cast(f.dataType).alias(f.name)
+          for v, f in zip(values, schema.fields, strict=True))
+    )
+
+
 @shared_artifact("s07_staging")
 def _s07_staging(spark: SparkSession, sf: str) -> tuple[str, object]:
     import datetime
@@ -443,9 +455,8 @@ def _s07_staging(spark: SparkSession, sf: str) -> tuple[str, object]:
     # and the engine's no-data micro-batch finalizes them — no trailing
     # sentinel-only batch (one fewer trigger, measured on the session op).
     max_ts = staged_column_max(f"{sf}/events.parquet", "ts")
-    flush = spark.createDataFrame(
-        [(-1, max_ts + datetime.timedelta(hours=13))],
-        "user_id long, ts timestamp",
+    flush = _sentinel_row(
+        spark, ev.schema, -1, max_ts + datetime.timedelta(hours=13)
     )
     staging = run_staging_dir("replay")
     stage_replay_chunks(
@@ -528,10 +539,8 @@ FROM documents GROUP BY 1
 
 
 def _s09(spark: SparkSession, sf: str) -> DataFrame:
-    from kafka_streams_learning_spark.streaming.stateful import asof_join_stream
-
     stream = _events_replay(spark, sf)
-    enriched = asof_join_stream(
+    enriched = stateful.asof_join_stream(
         stream.select("event_id", "user_id", "ts", "event_type")
     )
     name = _fresh_name("s09_out")
@@ -657,14 +666,14 @@ def _s14_sql() -> str:
     return _Q01_SQL
 
 
-# s12 — the ordered-arrival contract under REAL disorder: the events
-# fixture arrives shuffled (each row's replay position displaced by a
-# deterministic ±6 h hash jitter of its event time), and the watermark-
-# driven reorder buffer must still hash-match x22's batch as-of oracle
+# s12 — s09's as-of join under REAL disorder: the events fixture arrives
+# shuffled (each row's replay position displaced by a deterministic ±6 h
+# hash jitter of its event time), and `stateful.asof_join_stream` with
+# `disorder="13 hours"` must still hash-match x22's batch as-of oracle
 # exactly. This is the production story for the keyed-state operators: a
-# Kafka-partition-ordered source is NOT assumed — a 13 h watermark bounds
-# the disorder and the buffer restores per-key (ts, id) order before the
-# identical as-of core runs.
+# Kafka-partition-ordered source is NOT assumed — the 13 h watermark bounds
+# the disorder and the reorder buffer restores per-key (ts, id) order
+# before the same as-of release step s09 runs.
 
 
 @shared_artifact("s12_s20_staging")
@@ -700,10 +709,10 @@ def _jittered_events_staging(spark: SparkSession, sf: str) -> tuple[str, object]
     # batches (sentinel ts from the source fixture's footer stats, not a
     # rescan)
     max_ts = staged_column_max(f"{sf}/events.parquet", "ts")
-    sent = spark.createDataFrame(
-        [(-1, -1, max_ts + datetime.timedelta(hours=14),
-          "view", max_ts + datetime.timedelta(hours=7))],
-        jittered.schema,
+    sent = _sentinel_row(
+        spark, jittered.schema, -1, -1,
+        max_ts + datetime.timedelta(hours=14), "view",
+        max_ts + datetime.timedelta(hours=7),
     )
     staging = run_staging_dir("replay")
     stage_replay_chunks(
@@ -715,15 +724,12 @@ def _jittered_events_staging(spark: SparkSession, sf: str) -> tuple[str, object]
 
 def _s12(spark: SparkSession, sf: str) -> DataFrame:
     from kafka_streams_learning_spark.sources.replay import replay_stream
-    from kafka_streams_learning_spark.streaming.stateful import (
-        ordered_asof_join_stream,
-    )
 
     staging, schema = _jittered_events_staging(spark, sf)
     stream = replay_stream(spark, staging, schema).select(
         "event_id", "user_id", "ts", "event_type"
     )
-    enriched = ordered_asof_join_stream(stream, disorder="13 hours")
+    enriched = stateful.asof_join_stream(stream, disorder="13 hours")
     name = _fresh_name("s12_out")
     # arrow_batch_rows: rows are 3-4 narrow columns; big chunks keep the
     # per-chunk state re-send bounded under hot-key skew (see runner)
@@ -1005,9 +1011,9 @@ def _s19_sql() -> str:
 # s20 — s06's sliding count under REAL disorder (the r5/r6 carry-item):
 # the events fixture arrives shuffled (s12's jittered staging: each row's
 # replay position displaced by a deterministic ±6 h hash jitter of its
-# event time), and the watermark-driven reorder buffer
-# (`stateful.ordered_sliding_count_stream`) must restore per-key
-# (ts, event_id) order before the identical sliding core runs — emissions
+# event time), and `stateful.sliding_count_stream` with
+# `disorder="13 hours"` buffers rows until the watermark restores per-key
+# (ts, event_id) order, then runs s06's sliding release step — emissions
 # still hash-match q05's batch range-self-join oracle exactly. This
 # closes the ordered-arrival caveat on the keyed-state sliding count: a
 # Kafka-partition-ordered source is NOT assumed; a 13 h watermark bounds
@@ -1016,15 +1022,12 @@ def _s19_sql() -> str:
 
 def _s20(spark: SparkSession, sf: str) -> DataFrame:
     from kafka_streams_learning_spark.sources.replay import replay_stream
-    from kafka_streams_learning_spark.streaming.stateful import (
-        ordered_sliding_count_stream,
-    )
 
     staging, schema = _jittered_events_staging(spark, sf)
     stream = replay_stream(spark, staging, schema).select(
         "user_id", "event_id", "ts"
     )
-    counted = ordered_sliding_count_stream(
+    counted = stateful.sliding_count_stream(
         stream, SLIDE_LOOKBACK_MICROS, disorder="13 hours"
     )
     name = _fresh_name("s20_out")
@@ -1192,7 +1195,7 @@ def _s23_staging(spark: SparkSession, sf: str) -> tuple[str, str, object, object
     )
     o_stage = run_staging_dir("replay")
     stage_replay_chunks(
-        o.unionByName(spark.createDataFrame([(-1, -1, flush_ts)], o.schema)),
+        o.unionByName(_sentinel_row(spark, o.schema, -1, -1, flush_ts)),
         o_stage, REPLAY_CHUNKS, order_by="o_orderdate",
     )
     li = load_table(spark, sf, "lineitem").select(
@@ -1201,9 +1204,7 @@ def _s23_staging(spark: SparkSession, sf: str) -> tuple[str, str, object, object
     )
     l_stage = run_staging_dir("replay")
     stage_replay_chunks(
-        li.unionByName(
-            spark.createDataFrame([(-2, -1, 0.0, flush_ts)], li.schema)
-        ),
+        li.unionByName(_sentinel_row(spark, li.schema, -2, -1, 0.0, flush_ts)),
         l_stage, REPLAY_CHUNKS, order_by="l_shipdate",
     )
     return o_stage, l_stage, o.schema, li.schema

@@ -10,12 +10,14 @@ executors and checkpointed (the changelog-topic equivalent,
 `FraudProcessor.java:22`); each micro-batch touches only the keys present
 in the batch, Arrow-batched — no per-row Python round-trips.
 
-Implementation: `applyInPandasWithState` (stable since Spark 3.4). The
-five shard-keyed operators — `fraud_alert_stream_sharded`,
-`sliding_count_stream`, `asof_join_stream`, `ordered_sliding_count_stream`
-and `ordered_asof_join_stream` — are each one call to `_shard_keyed_state`,
-which owns the `_shard` column, the optional watermark + EventTimeTimeout,
-the state-budget default and the shard-count tag.
+Implementation: `applyInPandasWithState` (stable since Spark 3.4). Three
+builders, one per semantic: `fraud_alert_stream`, `sliding_count_stream`
+and `asof_join_stream`. Every shard-keyed form — the fraud alerts'
+`impl="sharded"` arm, and the sliding count and as-of join with or
+without a `disorder=` bound — is one call to `_shard_keyed_state`, which
+owns the `_shard` column, the optional watermark + EventTimeTimeout, the
+state-budget default and the shard-count tag. The sliding count and the
+as-of join share one reorder-buffer loop (`_reorder_buffer_fn`).
 
 Operational contracts (apply to every shard-keyed operator):
 
@@ -29,9 +31,9 @@ Operational contracts (apply to every shard-keyed operator):
 - **Checkpoint format breaks (r11, r12, r16).** The r11 shard re-keying
   changed the grouping key (user_id → _shard) and both state schemas;
   r12 re-typed the shard state columns from array<long>/array<string>
-  to packed binary blobs (see the note at
-  `_ORDERED_SLIDING_STATE_SCHEMA_SHARDED`: list-typed state made the
-  JVM-side pickle decode quadratic in buffer length under key skew);
+  to packed binary blobs (see the note at `_SLIDING_STATE_SCHEMA`:
+  list-typed state made the JVM-side pickle decode quadratic in buffer
+  length under key skew);
   r16 replaced the plain shard ids 0..n-1 with hash-placed labels and
   the default count 32 with `STATE_SHARDS` (see `shard_labels`), and
   `pin_shard_count` refuses a marker without the new labels.
@@ -115,7 +117,8 @@ def fraud_alert_stream(
     threshold: float,
     alert_after: int = 3,
     impl: str = "apply",
-    n_shards: int | None = None,
+    n_shards: int = STATE_SHARDS,
+    _max_state_bytes: int | None = None,
 ) -> DataFrame:
     """Streaming fraud alerts over a stream with columns
     (key_col, record_id, amount, ts). Emits one alert row per qualifying
@@ -124,31 +127,44 @@ def fraud_alert_stream(
     Streams groupByKey semantics (ref processor/FraudDetectionApp.java:104
     groups by user id; Kafka Streams discards null-key records at
     repartition/groupBy) — so the impl choice can never change emitted
-    rows, on dirty input too (ADVICE r13).
+    rows, on dirty input too (ADVICE r13). Each micro-batch is walked in
+    (ts, record_id) order per key; cross-batch order is arrival order.
 
     `impl` selects the state keying: "apply" (default) = one
     `applyInPandasWithState` group per key, the reference the sharded
-    arm's parity tests compare against; "sharded" = the bounded-shard
-    re-keying (`fraud_alert_stream_sharded` — invocations O(shards ×
-    batches) instead of O(distinct keys × batches); the r13 sweep-9 arm
-    for high key cardinality). `n_shards` sizes the sharded arm (default
-    `STATE_SHARDS`); it is ignored by the per-key arm, whose state key
-    is the user key itself."""
+    arm's parity tests compare against; "sharded" = the key re-keyed
+    onto `n_shards` bounded shards (`_sharded_alert_fn`) — the
+    high-key-cardinality arm: r13 sweep 9 measured the per-key arm at
+    ~200 µs per distinct key per batch (170 s at 1M events over 150k
+    keys), where the sharded arm's invocation count is shard-bound. The
+    per-key arm ignores `n_shards` and `_max_state_bytes`; its state key
+    is the user key itself.
+
+    RESTART INVARIANT (sharded arm): `n_shards` is part of the
+    checkpoint format (`pin_shard_count` — auto-pinned via the output
+    tag)."""
     from pyspark.sql import functions as F
 
     if impl not in ("apply", "sharded"):
         raise ValueError(f"impl must be apply|sharded, got {impl!r}")
     df = df.where(F.col(key_col).isNotNull())
-    if impl == "sharded":
-        return fraud_alert_stream_sharded(
-            df, key_col, threshold, alert_after, n_shards=n_shards
+    if impl == "apply":
+        return df.groupBy(key_col).applyInPandasWithState(
+            _alert_fn(threshold, alert_after),
+            outputStructType=ALERT_OUTPUT_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf="NoTimeout",
         )
-    return df.groupBy(key_col).applyInPandasWithState(
-        _alert_fn(threshold, alert_after),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _shard_keyed_state(
+        df.select(
+            F.col(key_col).cast("string").alias("key"),
+            "record_id", "amount", "ts",
+        ),
+        "key", n_shards,
+        partial(_sharded_alert_fn, threshold, alert_after),
+        ALERT_OUTPUT_SCHEMA, _SHARDED_ALERT_STATE_SCHEMA,
+        max_state_bytes=_max_state_bytes,
     )
 
 
@@ -212,7 +228,7 @@ _SHARDED_ALERT_STATE_SCHEMA = "keys binary, cnts binary"
 
 def _sharded_alert_fn(threshold: float, alert_after: int,
                       max_state_bytes: int):
-    """Shard-group walk for `fraud_alert_stream_sharded`: the whole
+    """Shard-group walk for `fraud_alert_stream(impl="sharded")`: the whole
     shard's micro-batch in ONE vectorized pass (sort by (key, ts,
     record_id), segmented cumsum of qualifying rows offset by each key's
     checkpointed count), so invocations are O(shards × batches) instead
@@ -301,43 +317,6 @@ def _sharded_alert_fn(threshold: float, alert_after: int,
             yield out
 
     return fn
-
-
-def fraud_alert_stream_sharded(
-    df: DataFrame,
-    key_col: str,
-    threshold: float,
-    alert_after: int = 3,
-    n_shards: int | None = None,
-    _max_state_bytes: int | None = None,
-) -> DataFrame:
-    """`fraud_alert_stream` re-keyed onto `n_shards` bounded shards —
-    the high-key-cardinality arm (r13 sweep 9 measured the per-key arm
-    at ~200 µs per distinct key per batch: 170 s at 1M events over 150k
-    keys, where this arm's invocation count is shard-bound). Emits the
-    same rows as the per-key arm; parity pinned by
-    tests/test_streaming.py and the r13 skew measurements.
-
-    Same arrival-order contract as the per-key arm (each micro-batch is
-    walked in (ts, record_id) order per key; cross-batch order is
-    arrival order), and the same restart invariant as every shard-keyed
-    operator: `n_shards` is part of the checkpoint format
-    (`pin_shard_count` — auto-pinned via the output tag)."""
-    from pyspark.sql import functions as F
-
-    # same null-key drop as the fraud_alert_stream entry (ADVICE r13):
-    # direct callers of the sharded arm get identical semantics, and a
-    # null key can no longer reach _pack_str mid-batch
-    base = df.where(F.col(key_col).isNotNull()).select(
-        F.col(key_col).cast("string").alias("key"),
-        "record_id", "amount", "ts",
-    )
-    return _shard_keyed_state(
-        base, "key", n_shards or STATE_SHARDS,
-        partial(_sharded_alert_fn, threshold, alert_after),
-        ALERT_OUTPUT_SCHEMA, _SHARDED_ALERT_STATE_SCHEMA,
-        max_state_bytes=_max_state_bytes,
-    )
 
 
 def _shard_keyed_state(
@@ -447,7 +426,10 @@ SLIDING_OUTPUT_SCHEMA = "user_id long, event_id long, ts timestamp, cnt long"
 
 
 def sliding_count_stream(
-    df: DataFrame, lookback_micros: int, n_shards: int = STATE_SHARDS,
+    df: DataFrame,
+    lookback_micros: int,
+    disorder: str | None = None,
+    n_shards: int = STATE_SHARDS,
     _max_composite: int = 2**62,
     _max_state_bytes: int | None = None,
 ) -> DataFrame:
@@ -459,21 +441,35 @@ def sliding_count_stream(
     per-key timestamp buffer bounded by the lookback (state size =
     events-in-window per key, evicted as event time advances), trading the
     self-join's shuffle for O(window) keyed state — the low-latency path.
-    Requires per-key event-time-ordered arrival (the replay source's
-    contract; for genuinely out-of-order sources use
-    `ordered_sliding_count_stream`, the watermark-reordering variant —
-    catalog row s20 drives it under shuffled arrival).
-    Equal-timestamp events are counted symmetrically (each sees the whole
-    tie group, matching the batch oracle) when they arrive in the same
-    micro-batch; a tie split across micro-batches counts asymmetrically —
-    inherent to append-only emission.
 
-    Shard-keyed like the reorder variant (see `ordered_sliding_count_
-    stream`): the same shard fn runs with `release_all=True` — every row
-    processes in its arrival batch (no watermark, no pending buffer), and
-    only the per-user lookback windows are carried. Negative event_ids
-    are reserved for replay flush sentinels and are dropped (the replay
-    source contract, shared with the reorder variants).
+    `disorder` is the stream's arrival contract:
+    - None (catalog row s06): per-key event-time-ordered arrival, the
+      replay source's contract. Every row processes in its arrival batch
+      (no watermark, no pending buffer, no timeout); only the per-user
+      lookback windows are carried. Equal-timestamp events are counted
+      symmetrically (each sees the whole tie group, matching the batch
+      oracle) when they arrive in the same micro-batch; a tie split
+      across micro-batches counts asymmetrically — inherent to
+      append-only emission.
+    - a time-interval string, e.g. "1 hour" (catalog row s20, a ±6 h
+      hash-jittered replay of the events fixture): rows may arrive up to
+      `disorder` later than the maximum event time already seen. `ts` is
+      watermarked by that delay; rows are buffered in shard state and
+      processed in exact (ts, event_id) order once the watermark passes
+      them. Emissions are delayed by up to `disorder` + one micro-batch
+      but are bit-identical to ordered arrival (and to the batch oracle)
+      for any arrival order within the bound; later rows are dropped by
+      Spark's standard late-data filtering — the same grace contract as
+      the windowed aggregations.
+
+    State is keyed by `hash(user_id) % n_shards`, NOT per user: the
+    second-decade probe (BENCH_NOTES sweep 6) measured per-user keying at
+    ~200 µs of invocation overhead per (key × micro-batch), which at 150k
+    users dominated end-to-end cost 10:1. Per-user semantics are preserved
+    inside the shard by segmented binary search (composite keys). Shard
+    state stays bounded: pending ≈ disorder × shard arrival rate, window
+    buffers ≈ lookback × shard rate. Negative event_ids are reserved for
+    replay flush sentinels and are dropped.
 
     RESTART INVARIANT: `n_shards` is part of the checkpoint format — it
     must not change across restarts of one checkpoint (see module
@@ -482,10 +478,10 @@ def sliding_count_stream(
     Input columns: (user_id, event_id, ts)."""
     return _shard_keyed_state(
         df, "user_id", n_shards,
-        partial(_sliding_shard_fn, lookback_micros, release_all=True,
-                max_composite=_max_composite),
-        SLIDING_OUTPUT_SCHEMA, _ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
-        max_state_bytes=_max_state_bytes,
+        partial(_sliding_shard_fn, lookback_micros,
+                release_all=disorder is None, max_composite=_max_composite),
+        SLIDING_OUTPUT_SCHEMA, _SLIDING_STATE_SCHEMA,
+        disorder=disorder, max_state_bytes=_max_state_bytes,
     )
 
 
@@ -499,6 +495,7 @@ ASOF_OUTPUT_SCHEMA = (
 def asof_join_stream(
     df: DataFrame,
     match_type: str = "purchase",
+    disorder: str | None = None,
     n_shards: int = STATE_SHARDS,
     _max_composite: int = 2**62,
     _max_state_bytes: int | None = None,
@@ -511,19 +508,24 @@ def asof_join_stream(
     feature-store lookup shape at serving latency. Emissions concatenated
     across micro-batches equal the batch result (append-mode streaming ≡
     batch once input is exhausted), which is what the oracle hashes.
-    Requires per-key event-time-ordered arrival (the replay source's
-    contract — `stage_replay_chunks` never splits an equal-event-time run
-    across chunks; for genuinely out-of-order sources use
-    `ordered_asof_join_stream`, the watermark-reordering variant).
-    Same-timestamp runs that DO straddle a micro-batch boundary are still
-    handled exactly: enrichment is guarded strictly (state pts < run ts)
-    and a tie fold MERGES max ids instead of replacing state.
 
-    Shard-keyed like the reorder variant (see `ordered_asof_join_stream`):
-    the same shard fn runs with `release_all=True` — every row processes
-    in its arrival batch, no watermark, no pending buffer. Negative
-    event_ids are reserved for replay flush sentinels and are dropped
-    (the replay source contract, shared with the reorder variants).
+    `disorder` is the arrival contract, as in `sliding_count_stream`:
+    - None (catalog row s09): per-key event-time-ordered arrival
+      (`stage_replay_chunks` never splits an equal-event-time run across
+      chunks); every row processes in its arrival batch. Same-timestamp
+      runs that DO straddle a micro-batch boundary are still handled
+      exactly: enrichment is guarded strictly (state pts < run ts) and a
+      tie fold MERGES max ids instead of replacing state.
+    - a time-interval string (catalog row s12): the watermark-driven
+      reorder buffer releases rows in exact (ts, event_id) order once the
+      watermark proves their run complete; emissions are bit-identical to
+      ordered arrival and the batch x22 oracle for any arrival order
+      within the bound, and later rows are dropped by Spark's late-data
+      filtering.
+
+    Sharded like `sliding_count_stream`: per-user as-of matching runs as
+    one segmented binary search across the shard. Negative event_ids are
+    reserved for replay flush sentinels and are dropped.
 
     RESTART INVARIANT: `n_shards` is part of the checkpoint format — it
     must not change across restarts of one checkpoint (see module
@@ -532,23 +534,23 @@ def asof_join_stream(
     Input columns: (event_id, user_id, ts, event_type)."""
     return _shard_keyed_state(
         df, "user_id", n_shards,
-        partial(_asof_shard_fn, match_type, release_all=True,
+        partial(_asof_shard_fn, match_type, release_all=disorder is None,
                 max_composite=_max_composite),
-        ASOF_OUTPUT_SCHEMA, _ORDERED_ASOF_STATE_SCHEMA_SHARDED,
-        max_state_bytes=_max_state_bytes,
+        ASOF_OUTPUT_SCHEMA, _ASOF_STATE_SCHEMA,
+        disorder=disorder, max_state_bytes=_max_state_bytes,
     )
 
 
 # --- shard-keyed stateful machinery: sliding windows + as-of, ordered and
 # --- reordered arrival ---------------------------------------------------
 #
-# One pair of shard fns serves all four operators. The ORDERED-ARRIVAL
-# wrappers above (`sliding_count_stream`, `asof_join_stream`) run them
-# with release_all=True: every row processes in its arrival batch — the
+# One reorder-buffer loop (`_reorder_buffer_fn`) serves both semantics in
+# both arrival modes. Without a `disorder` bound the builders run it with
+# release_all=True: every row processes in its arrival batch — the
 # per-key ordering guarantee the reference gets for free from Kafka topic
 # partitioning (`joins/StreamStreamJoinExample.java:131-141`: one key, one
-# partition, offset order = append order). The REORDER wrappers below run
-# them with a watermark: incoming rows are buffered in shard state and
+# partition, offset order = append order). With one they run it under a
+# watermark: incoming rows are buffered in shard state and
 # only released — (user, ts, id)-sorted, in complete equal-timestamp
 # runs — once the watermark proves no earlier row can still arrive. Spark
 # drops rows older than the watermark before the operator (standard
@@ -581,9 +583,14 @@ def asof_join_stream(
 # the JVM never parses. CHECKPOINT FORMAT BREAK (r12): checkpoints
 # written by the array<long>-typed r11 state cannot restart on this
 # code (see module docstring).
-_ORDERED_SLIDING_STATE_SCHEMA_SHARDED = (
+_SLIDING_STATE_SCHEMA = (
     "buf_u binary, buf_t binary, "
     "pend_u binary, pend_t binary, pend_id binary"
+)
+_ASOF_STATE_SCHEMA = (
+    "pu_u binary, pu_t binary, pu_id binary, "
+    "pend_u binary, pend_t binary, pend_id binary, "
+    "pend_type binary"
 )
 
 
@@ -779,134 +786,6 @@ def _sliding_release(ru, rt, tb_u, tb_t, lookback_micros: int,
     return cnt, users[kept_c // span], kept_c % span + lo
 
 
-def _sliding_shard_fn(lookback_micros: int, max_composite: int,
-                      max_state_bytes: int, release_all: bool = False):
-    def fn(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            buf_u, buf_t, pend_u, pend_t, pend_id = (
-                _unpack_i64(v) for v in state.get
-            )
-        else:
-            buf_u = buf_t = pend_u = pend_t = pend_id = np.empty(0, "int64")
-        new = _collect_chunks(pdfs, ["user_id", "ts", "event_id"])
-        if new is not None:
-            pend_u = np.concatenate([pend_u, new[0]])
-            pend_t = np.concatenate([pend_t, new[1]])
-            pend_id = np.concatenate([pend_id, new[2]])
-        if release_all:
-            wm_ms, frontier = 0, 2**62  # ordered arrival: process the batch now
-        else:
-            wm_ms = state.getCurrentWatermarkMs()
-            frontier = wm_ms * 1000  # watermark ms → event-time micros
-        # Release rows strictly below the watermark frontier: late
-        # filtering guarantees no more members of those (user, ts) runs,
-        # and a run never straddles the frontier (all-or-nothing per ts).
-        rel_mask = pend_t < frontier
-        out = None
-        if rel_mask.any():
-            ru, rt, ri = pend_u[rel_mask], pend_t[rel_mask], pend_id[rel_mask]
-            order = np.lexsort((ri, rt, ru))
-            ru, rt, ri = ru[order], rt[order], ri[order]
-            # split carried window buffers into touched / untouched users
-            touched = np.isin(buf_u, np.unique(ru))
-            cnt, nb_u, nb_t = _sliding_release(
-                ru, rt, buf_u[touched], buf_t[touched], lookback_micros,
-                max_composite,
-            )
-            out = pd.DataFrame(
-                {
-                    "user_id": ru,
-                    "event_id": ri,
-                    "ts": pd.to_datetime(rt * 1000),
-                    "cnt": cnt,
-                }
-            )
-            # merge back with untouched buffers, restoring (u, t) lexsort
-            buf_u = np.concatenate([buf_u[~touched], nb_u])
-            buf_t = np.concatenate([buf_t[~touched], nb_t])
-            order = np.lexsort((buf_t, buf_u))
-            buf_u, buf_t = buf_u[order], buf_t[order]
-            pend_u = pend_u[~rel_mask]
-            pend_t = pend_t[~rel_mask]
-            pend_id = pend_id[~rel_mask]
-        blobs = (
-            _pack_i64(buf_u),
-            _pack_i64(buf_t),
-            _pack_i64(pend_u),
-            _pack_i64(pend_t),
-            _pack_i64(pend_id),
-        )
-        _check_state_budget(blobs, max_state_bytes)
-        state.update(blobs)
-        if len(pend_t) and not release_all:
-            # wake this shard only once the watermark passes its oldest
-            # pending row — not on every watermark tick
-            state.setTimeoutTimestamp(
-                max(wm_ms + 1, int(pend_t.min()) // 1000 + 1)
-            )
-        if out is not None:
-            yield out
-
-    return fn
-
-
-def ordered_sliding_count_stream(
-    df: DataFrame,
-    lookback_micros: int,
-    disorder: str,
-    n_shards: int = STATE_SHARDS,
-    _max_composite: int = 2**62,
-    _max_state_bytes: int | None = None,
-) -> DataFrame:
-    """`sliding_count_stream` for OUT-OF-ORDER arrival: rows may arrive up
-    to `disorder` (a time-interval string, e.g. "1 hour") later than the
-    maximum event time already seen. A watermark of `disorder` is applied
-    to `ts`; rows are buffered in keyed state and processed in exact
-    (ts, event_id) order once the watermark passes them. Rows later than
-    the bound are dropped by Spark's standard late-data filtering — the
-    same grace contract as the windowed aggregations.
-
-    State is keyed by `hash(user_id) % n_shards`, NOT per user: the
-    second-decade probe (BENCH_NOTES sweep 6) measured per-user keying at
-    ~200 µs of invocation overhead per (key × micro-batch), which at 150k
-    users dominated end-to-end cost 10:1. Per-user semantics are preserved
-    inside the shard by segmented binary search (composite keys), so group
-    invocations are O(shards × batches) and the per-event work is one
-    vectorized pass. Shard state stays bounded: pending ≈ disorder-window
-    × shard arrival rate, window buffers ≈ lookback × shard rate.
-
-    Emissions are delayed by up to `disorder` + one micro-batch versus the
-    ordered-arrival operator, but are bit-identical to it (and to the
-    batch oracle) for any arrival order within the bound. Catalog row
-    s20 drives this operator end-to-end on a ±6 h hash-jittered replay
-    of the events fixture against q05's batch oracle.
-
-    RESTART INVARIANT: `n_shards` is part of the checkpoint format — it
-    must not change across restarts of one checkpoint (see module
-    docstring / `pin_shard_count`).
-
-    Input columns: (user_id, event_id, ts)."""
-    return _shard_keyed_state(
-        df, "user_id", n_shards,
-        partial(_sliding_shard_fn, lookback_micros,
-                max_composite=_max_composite),
-        SLIDING_OUTPUT_SCHEMA, _ORDERED_SLIDING_STATE_SCHEMA_SHARDED,
-        disorder=disorder, max_state_bytes=_max_state_bytes,
-    )
-
-
-# packed-binary like the sliding schema (see the r12 note there)
-_ORDERED_ASOF_STATE_SCHEMA_SHARDED = (
-    "pu_u binary, pu_t binary, pu_id binary, "
-    "pend_u binary, pend_t binary, pend_id binary, "
-    "pend_type binary"
-)
-
-
 def _asof_release(ru, rt, ri, is_p, su_u, su_t, su_id,
                   max_composite: int = 2**62):
     """Pure release-step math for the as-of enrichment: released rows
@@ -977,93 +856,72 @@ def _asof_release(ru, rt, ri, is_p, su_u, su_t, su_id,
     return p_t[safe], p_id[safe], vis, nu, nt, nid
 
 
-def _asof_shard_fn(match_type: str, max_composite: int,
-                   max_state_bytes: int, release_all: bool = False):
+
+
+def _reorder_buffer_fn(release, n_carry: int, extra_cols: list[str],
+                       max_state_bytes: int, release_all: bool):
+    """The shard group fn both reorder-buffered semantics run. Shard state
+    is `n_carry` per-user carry columns, (user, ts)-sorted, then the
+    pending rows' (user_id, ts, event_id, *extra_cols): int64 columns as
+    `_pack_i64` blobs, `extra_cols` (event_type) as `_pack_str` blobs.
+
+    Each call appends the new rows to the pending buffer and releases the
+    rows below the watermark frontier (every row with `release_all`),
+    (user, ts, id)-lexsorted, to `release(rel_cols, touched_carry) ->
+    (output frame, new carry)` together with the carry of the users they
+    touch; the new carry replaces those users' carry."""
+    import numpy as np
+
+    cols = ["user_id", "ts", "event_id", *extra_cols]
+    n_i64 = n_carry + 3
+    packs = [_pack_i64] * n_i64 + [_pack_str] * len(extra_cols)
+    unpacks = [_unpack_i64] * n_i64 + [_unpack_str] * len(extra_cols)
+    empty = [np.empty(0, "int64")] * n_i64 + [np.empty(0, object)] * len(
+        extra_cols
+    )
+
     def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         if state.exists:
-            pu_u, pu_t, pu_id, pend_u, pend_t, pend_id = (
-                _unpack_i64(v) for v in state.get[:6]
-            )
-            pend_type = _unpack_str(state.get[6])
+            arrays = [unpack(b) for unpack, b in zip(unpacks, state.get)]
         else:
-            pu_u = pu_t = pu_id = pend_u = pend_t = pend_id = np.empty(
-                0, "int64"
-            )
-            pend_type = np.empty(0, object)
-        new = _collect_chunks(pdfs, ["user_id", "ts", "event_id", "event_type"])
+            arrays = empty
+        carry, pend = arrays[:n_carry], arrays[n_carry:]
+        new = _collect_chunks(pdfs, cols)
         if new is not None:
-            pend_u = np.concatenate([pend_u, new[0]])
-            pend_t = np.concatenate([pend_t, new[1]])
-            pend_id = np.concatenate([pend_id, new[2]])
-            pend_type = np.concatenate([pend_type, new[3]])
+            pend = [np.concatenate([p, n]) for p, n in zip(pend, new)]
         if release_all:
             wm_ms, frontier = 0, 2**62  # ordered arrival: process the batch now
         else:
             wm_ms = state.getCurrentWatermarkMs()
-            frontier = wm_ms * 1000
-        rel_mask = pend_t < frontier
+            frontier = wm_ms * 1000  # watermark ms → event-time micros
+        # Release rows strictly below the watermark frontier: late
+        # filtering guarantees no more members of those (user, ts) runs,
+        # and a run never straddles the frontier (all-or-nothing per ts).
+        rel_mask = pend[1] < frontier
         out = None
         if rel_mask.any():
-            ru, rt, ri = pend_u[rel_mask], pend_t[rel_mask], pend_id[rel_mask]
-            re_ = pend_type[rel_mask]
-            order = np.lexsort((ri, rt, ru))
-            ru, rt, ri, re_ = ru[order], rt[order], ri[order], re_[order]
-            # carried per-user latest purchases for users in this release
-            su_mask = np.isin(pu_u, np.unique(ru))
-            is_p = re_ == match_type
-            lp_t, lp_id, vis, nu, nt, nid = _asof_release(
-                ru, rt, ri, is_p,
-                pu_u[su_mask], pu_t[su_mask], pu_id[su_mask],
-                max_composite,
-            )
-            vis_s = pd.Series(vis)
-            out = pd.DataFrame(
-                {
-                    "event_id": ri,
-                    "user_id": ru,
-                    "ts": pd.to_datetime(rt * 1000),
-                    "event_type": re_.astype(str),
-                    "last_purchase_ts": pd.Series(
-                        pd.to_datetime(lp_t * 1000)
-                    ).where(vis_s, pd.NaT),
-                    # None-bearing int columns must stay nullable Int64,
-                    # not drift to float64 (lossy for large ids)
-                    "last_purchase_id": pd.Series(
-                        lp_id, dtype="Int64"
-                    ).where(vis_s, pd.NA),
-                    "micros_since_purchase": pd.Series(
-                        rt - lp_t, dtype="Int64"
-                    ).where(vis_s, pd.NA),
-                }
-            )
-            pu_u = np.concatenate([pu_u[~su_mask], nu])
-            pu_t = np.concatenate([pu_t[~su_mask], nt])
-            pu_id = np.concatenate([pu_id[~su_mask], nid])
-            p_order = np.argsort(pu_u)
-            pu_u, pu_t, pu_id = pu_u[p_order], pu_t[p_order], pu_id[p_order]
-            pend_u = pend_u[~rel_mask]
-            pend_t = pend_t[~rel_mask]
-            pend_id = pend_id[~rel_mask]
-            pend_type = pend_type[~rel_mask]
-        blobs = (
-            _pack_i64(pu_u),
-            _pack_i64(pu_t),
-            _pack_i64(pu_id),
-            _pack_i64(pend_u),
-            _pack_i64(pend_t),
-            _pack_i64(pend_id),
-            _pack_str(pend_type),
-        )
+            rel = [p[rel_mask] for p in pend]
+            order = np.lexsort((rel[2], rel[1], rel[0]))
+            rel = [r[order] for r in rel]
+            # split the carry into touched / untouched users
+            touched = np.isin(carry[0], np.unique(rel[0]))
+            out, new_carry = release(rel, [c[touched] for c in carry])
+            # merge back with the untouched carry, restoring (u, t) order
+            carry = [np.concatenate([c[~touched], nc])
+                     for c, nc in zip(carry, new_carry)]
+            order = np.lexsort((carry[1], carry[0]))
+            carry = [c[order] for c in carry]
+            pend = [p[~rel_mask] for p in pend]
+        blobs = tuple(pack(a) for pack, a in zip(packs, carry + pend))
         _check_state_budget(blobs, max_state_bytes)
         state.update(blobs)
-        if len(pend_t) and not release_all:
-            # wake only when the oldest pending row becomes releasable
+        if len(pend[1]) and not release_all:
+            # wake this shard only once the watermark passes its oldest
+            # pending row — not on every watermark tick
             state.setTimeoutTimestamp(
-                max(wm_ms + 1, int(pend_t.min()) // 1000 + 1)
+                max(wm_ms + 1, int(pend[1].min()) // 1000 + 1)
             )
         if out is not None:
             yield out
@@ -1071,35 +929,62 @@ def _asof_shard_fn(match_type: str, max_composite: int,
     return fn
 
 
-def ordered_asof_join_stream(
-    df: DataFrame,
-    disorder: str,
-    match_type: str = "purchase",
-    n_shards: int = STATE_SHARDS,
-    _max_composite: int = 2**62,
-    _max_state_bytes: int | None = None,
-) -> DataFrame:
-    """`asof_join_stream` for OUT-OF-ORDER arrival: the watermark-driven
-    reorder buffer releases rows in exact (ts, event_id) order once the
-    watermark (delay = `disorder`) proves their run complete, then feeds
-    the identical as-of semantics — emissions are bit-identical to the
-    ordered-arrival operator and the batch x22 oracle for any arrival
-    order within the bound; later rows are dropped by Spark's standard
-    late-data filtering.
+def _sliding_shard_fn(lookback_micros: int, max_composite: int,
+                      max_state_bytes: int, release_all: bool = False):
+    """Sliding count on the reorder-buffer loop; the carry is each
+    user's lookback window (buf_u, buf_t)."""
 
-    Sharded like `ordered_sliding_count_stream` (see there): state is
-    keyed by `hash(user_id) % n_shards`, per-user as-of matching runs as
-    one segmented binary search across the shard, and the carried state
-    is one (latest purchase ts, id) pair per user that has purchased.
+    def release(rel, carry):
+        ru, rt, ri = rel
+        cnt, nb_u, nb_t = _sliding_release(
+            ru, rt, *carry, lookback_micros, max_composite
+        )
+        out = pd.DataFrame(
+            {
+                "user_id": ru,
+                "event_id": ri,
+                "ts": pd.to_datetime(rt * 1000),
+                "cnt": cnt,
+            }
+        )
+        return out, (nb_u, nb_t)
 
-    RESTART INVARIANT: `n_shards` is part of the checkpoint format — it
-    must not change across restarts of one checkpoint (see module
-    docstring / `pin_shard_count`).
+    return _reorder_buffer_fn(release, 2, [], max_state_bytes, release_all)
 
-    Input columns: (event_id, user_id, ts, event_type)."""
-    return _shard_keyed_state(
-        df, "user_id", n_shards,
-        partial(_asof_shard_fn, match_type, max_composite=_max_composite),
-        ASOF_OUTPUT_SCHEMA, _ORDERED_ASOF_STATE_SCHEMA_SHARDED,
-        disorder=disorder, max_state_bytes=_max_state_bytes,
+
+def _asof_shard_fn(match_type: str, max_composite: int,
+                   max_state_bytes: int, release_all: bool = False):
+    """As-of join on the reorder-buffer loop; the carry is each user's
+    latest match (pu_u, pu_t, pu_id), and pending rows keep their
+    event_type."""
+
+    def release(rel, carry):
+        ru, rt, ri, types = rel
+        lp_t, lp_id, vis, *new_carry = _asof_release(
+            ru, rt, ri, types == match_type, *carry, max_composite
+        )
+        vis_s = pd.Series(vis)
+        out = pd.DataFrame(
+            {
+                "event_id": ri,
+                "user_id": ru,
+                "ts": pd.to_datetime(rt * 1000),
+                "event_type": types.astype(str),
+                "last_purchase_ts": pd.Series(
+                    pd.to_datetime(lp_t * 1000)
+                ).where(vis_s, pd.NaT),
+                # None-bearing int columns must stay nullable Int64,
+                # not drift to float64 (lossy for large ids)
+                "last_purchase_id": pd.Series(
+                    lp_id, dtype="Int64"
+                ).where(vis_s, pd.NA),
+                "micros_since_purchase": pd.Series(
+                    rt - lp_t, dtype="Int64"
+                ).where(vis_s, pd.NA),
+            }
+        )
+        return out, new_carry
+
+    return _reorder_buffer_fn(
+        release, 3, ["event_type"], max_state_bytes, release_all
     )

@@ -168,10 +168,10 @@ def test_asof_join_matches_naive_semantics(spark, rows):
 
 # ---------------------------------------------------------------------------
 # 4. the ordered-arrival contract made real: the watermark-driven reorder
-#    buffer (`streaming/stateful.ordered_asof_join_stream`) must produce
-#    the EXACT naive as-of semantics for ANY arrival order — rows shuffled
-#    arbitrarily across micro-batches — as long as disorder stays within
-#    the watermark bound. This is the guarantee Kafka partitioning gives
+#    buffer (`streaming/stateful.asof_join_stream` with `disorder=`) must
+#    produce the EXACT naive as-of semantics for ANY arrival order — rows
+#    shuffled arbitrarily across micro-batches — as long as disorder stays
+#    within the watermark bound. This is the guarantee Kafka partitioning gives
 #    the reference for free, proven here as a property, not a docstring.
 
 
@@ -210,7 +210,7 @@ def test_ordered_asof_stream_matches_naive_under_shuffled_arrival(
     stream = replay_stream(
         spark, d, "event_id long, user_id long, ts timestamp, event_type string"
     )
-    out = stateful.ordered_asof_join_stream(stream, disorder="10 minutes")
+    out = stateful.asof_join_stream(stream, disorder="10 minutes")
     batches = runner.run_collect_batches(out, "append")
     got = {
         r.event_id: (r.last_purchase_id, r.last_purchase_ts)

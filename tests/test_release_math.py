@@ -237,3 +237,201 @@ def test_state_string_codec_roundtrip():
 
     with pytest.raises(ValueError, match="non-null"):
         _pack_str(np.asarray(["view", None, "click"], object))
+
+
+# --- shard fns end to end, without Spark: emitted rows and packed state
+# bytes across two data calls and one timeout call. The state tuples are
+# the checkpoint format (schemas `_SLIDING_STATE_SCHEMA` /
+# `_ASOF_STATE_SCHEMA`): int64 columns are raw little-endian bytes, the
+# event-type column a pickled (vocab, uint16 codes) tuple.
+
+T0 = 1_700_000_000_000_000  # event-time origin, micros
+
+
+class _FakeGroupState:
+    """The slice of `GroupState` the shard fns use."""
+
+    def __init__(self):
+        self.value = None
+        self.wm_ms = 0
+        self.timeouts: list[int] = []
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeouts.append(ms - T0 // 1000)
+
+
+def _i64(*vals):
+    import struct
+
+    return struct.pack(f"<{len(vals)}q", *vals)
+
+
+def _ts(*secs):
+    return _i64(*(T0 + s * 1_000_000 for s in secs))
+
+
+def _chunk(rows, cols):
+    """One Arrow chunk as the shard fn sees it: the `_shard` key plus the
+    input columns, `ts` as datetime64[ns] (given in seconds after T0)."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=cols)
+    pdf["ts"] = pd.to_datetime((T0 + pdf["ts"] * 1_000_000) * 1000)
+    pdf.insert(0, "_shard", 7)
+    return pdf
+
+
+def _emitted(out):
+    """Output rows as tuples; timestamps as seconds after T0, nulls None."""
+    import pandas as pd
+
+    rows = []
+    for rec in out.itertuples(index=False):
+        row = []
+        for v in rec:
+            if v is None or v is pd.NaT or v is pd.NA:
+                row.append(None)
+            elif isinstance(v, pd.Timestamp):
+                row.append((v.value // 1000 - T0) // 1_000_000)
+            else:
+                row.append(v.item() if hasattr(v, "item") else v)
+        rows.append(tuple(row))
+    return rows
+
+
+_SLIDING_IN = ["user_id", "event_id", "ts"]
+_ASOF_IN = ["event_id", "user_id", "ts", "event_type"]
+# two data calls (the first carries a flush sentinel, event_id -1) and
+# one call with no rows — a timeout call in the disorder mode
+_SLIDING_CALLS = [
+    [(1, 10, 0), (2, 11, 1), (1, 12, 5), (-1, -1, 100)],
+    [(1, 13, 12), (2, 14, 3), (1, 15, 12), (3, 16, 20)],
+    None,
+]
+_ASOF_CALLS = [
+    [(10, 1, 0, "purchase"), (11, 2, 1, "view"), (12, 1, 5, "view"),
+     (-1, -1, 100, "view")],
+    [(13, 1, 12, "purchase"), (14, 2, 3, "purchase"), (15, 1, 12, "view"),
+     (16, 3, 20, "view")],
+    None,
+]
+# watermarks of the three calls (ms): 2 s, 12 s, 30 s after T0
+_WATERMARKS_MS = [(T0 + s * 1_000_000) // 1000 for s in (2, 12, 30)]
+_VIEW = (
+    b"\x80\x04\x95\x16\x00\x00\x00\x00\x00\x00\x00\x8c\x01d\x94]\x94"
+    b"\x8c\x04view\x94aC\x02\x00\x00\x94\x87\x94."
+)
+_PURCHASE_VIEW_VIEW = (
+    b"\x80\x04\x95&\x00\x00\x00\x00\x00\x00\x00\x8c\x01d\x94]\x94("
+    b"\x8c\x08purchase\x94\x8c\x04view\x94eC\x06\x00\x00\x01\x00\x01"
+    b"\x00\x94\x87\x94."
+)
+_E = b""
+# per call: (emitted rows, state tuple, timeouts set so far, ms after T0)
+_SHARD_FN_CASES = {
+    "sliding-ordered": (
+        "sliding", True, [
+            ([(1, 10, 0, 1), (1, 12, 5, 2), (2, 11, 1, 1)],
+             (_i64(1, 1, 2), _ts(0, 5, 1), _E, _E, _E), []),
+            ([(1, 13, 12, 3), (1, 15, 12, 3), (2, 14, 3, 2), (3, 16, 20, 1)],
+             (_i64(1, 1, 1, 2, 2, 3), _ts(5, 12, 12, 1, 3, 20), _E, _E, _E),
+             []),
+            ([], (_i64(1, 1, 1, 2, 2, 3), _ts(5, 12, 12, 1, 3, 20),
+                  _E, _E, _E), []),
+        ],
+    ),
+    "sliding-disorder": (
+        "sliding", False, [
+            ([(1, 10, 0, 1), (2, 11, 1, 1)],
+             (_i64(1, 2), _ts(0, 1), _i64(1), _ts(5), _i64(12)), [5001]),
+            ([(1, 12, 5, 2), (2, 14, 3, 2)],
+             (_i64(1, 1, 2, 2), _ts(0, 5, 1, 3), _i64(1, 1, 3),
+              _ts(12, 12, 20), _i64(13, 15, 16)), [5001, 12001]),
+            ([(1, 13, 12, 3), (1, 15, 12, 3), (3, 16, 20, 1)],
+             (_i64(1, 1, 1, 2, 2, 3), _ts(5, 12, 12, 1, 3, 20), _E, _E, _E),
+             [5001, 12001]),
+        ],
+    ),
+    "asof-ordered": (
+        "asof", True, [
+            ([(10, 1, 0, "purchase", None, None, None),
+              (12, 1, 5, "view", 0, 10, 5_000_000),
+              (11, 2, 1, "view", None, None, None)],
+             (_i64(1), _ts(0), _i64(10), _E, _E, _E, _E), []),
+            ([(13, 1, 12, "purchase", 0, 10, 12_000_000),
+              (15, 1, 12, "view", 0, 10, 12_000_000),
+              (14, 2, 3, "purchase", None, None, None),
+              (16, 3, 20, "view", None, None, None)],
+             (_i64(1, 2), _ts(12, 3), _i64(13, 14), _E, _E, _E, _E), []),
+            ([], (_i64(1, 2), _ts(12, 3), _i64(13, 14), _E, _E, _E, _E), []),
+        ],
+    ),
+    "asof-disorder": (
+        "asof", False, [
+            ([(10, 1, 0, "purchase", None, None, None),
+              (11, 2, 1, "view", None, None, None)],
+             (_i64(1), _ts(0), _i64(10), _i64(1), _ts(5), _i64(12), _VIEW),
+             [5001]),
+            ([(12, 1, 5, "view", 0, 10, 5_000_000),
+              (14, 2, 3, "purchase", None, None, None)],
+             (_i64(1, 2), _ts(0, 3), _i64(10, 14), _i64(1, 1, 3),
+              _ts(12, 12, 20), _i64(13, 15, 16), _PURCHASE_VIEW_VIEW),
+             [5001, 12001]),
+            ([(13, 1, 12, "purchase", 0, 10, 12_000_000),
+              (15, 1, 12, "view", 0, 10, 12_000_000),
+              (16, 3, 20, "view", None, None, None)],
+             (_i64(1, 2), _ts(12, 3), _i64(13, 14), _E, _E, _E, _E),
+             [5001, 12001]),
+        ],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SHARD_FN_CASES))
+def test_shard_fn_emits_rows_and_packs_state_bytes(case):
+    """`_sliding_shard_fn` / `_asof_shard_fn` in both release modes,
+    driven through a fake GroupState: the emitted rows, the exact packed
+    state bytes after every call (the checkpoint format) and the
+    event-time timeouts. The disorder mode releases rows below each
+    call's watermark; the ordered mode (`release_all`) releases every
+    row in its arrival call and sets no timeout. Flush sentinels are
+    dropped."""
+    from kafka_streams_learning_spark.streaming.stateful import (
+        _asof_shard_fn,
+        _sliding_shard_fn,
+    )
+
+    op, release_all, expected = _SHARD_FN_CASES[case]
+    if op == "sliding":
+        fn = _sliding_shard_fn(10_000_000, max_composite=2**62,
+                               max_state_bytes=1 << 20,
+                               release_all=release_all)
+        cols, calls = _SLIDING_IN, _SLIDING_CALLS
+    else:
+        fn = _asof_shard_fn("purchase", max_composite=2**62,
+                            max_state_bytes=1 << 20, release_all=release_all)
+        cols, calls = _ASOF_IN, _ASOF_CALLS
+    state = _FakeGroupState()
+    for rows, wm_ms, (want_rows, want_state, want_timeouts) in zip(
+        calls, _WATERMARKS_MS, expected
+    ):
+        state.wm_ms = wm_ms
+        chunks = [] if rows is None else [_chunk(rows, cols)]
+        outs = list(fn((7,), iter(chunks), state))
+        assert [r for out in outs for r in _emitted(out)] == want_rows
+        assert state.value == want_state
+        assert state.timeouts == want_timeouts

@@ -154,11 +154,12 @@ def test_stateful_fraud_alerts_across_batches(spark, tmpdir):
 
 
 def test_sharded_fraud_arm_matches_per_key_arm(spark, tmpdir):
-    """`fraud_alert_stream_sharded` (r13, the high-key-cardinality arm)
-    must emit exactly the per-key arm's rows: multi-key batches, a key's
-    counter carried across micro-batches, below-threshold rows skipped,
-    several keys colliding into one shard, and keys unseen by the state
-    yet. Deterministic small replay + a randomized 60-key replay."""
+    """`fraud_alert_stream(impl="sharded")` (r13, the high-key-
+    cardinality arm) must emit exactly the per-key arm's rows: multi-key
+    batches, a key's counter carried across micro-batches, below-threshold
+    rows skipped, several keys colliding into one shard, and keys unseen
+    by the state yet. Deterministic small replay + a randomized 60-key
+    replay."""
     import random
 
     base = ts("2024-01-01T00:00:00")
@@ -171,9 +172,9 @@ def test_sharded_fraud_arm_matches_per_key_arm(spark, tmpdir):
             threshold=500.0, impl="apply",
         )
         runner.run_to_memory(per_key, f"pk_{tag}", "append")
-        sharded = stateful.fraud_alert_stream_sharded(
+        sharded = stateful.fraud_alert_stream(
             replay_stream(spark, d, EVENTS_SCHEMA), "key",
-            threshold=500.0, n_shards=n_shards,
+            threshold=500.0, impl="sharded", n_shards=n_shards,
         )
         runner.run_to_memory(sharded, f"sh_{tag}", "append")
         a = sorted(map(tuple, spark.table(f"pk_{tag}").collect()))
@@ -366,7 +367,7 @@ def test_ordered_asof_out_of_order_arrival(spark, tmpdir):
     ]
     stage_explicit_chunks(spark, chunks, ASOF_SCHEMA, tmpdir)
     stream = replay_stream(spark, tmpdir, ASOF_SCHEMA)
-    out = stateful.ordered_asof_join_stream(stream, disorder="10 minutes")
+    out = stateful.asof_join_stream(stream, disorder="10 minutes")
     batches = runner.run_collect_batches(out, "append")
     got = {
         r.event_id: (r.last_purchase_id, r.micros_since_purchase)
@@ -398,7 +399,7 @@ def test_ordered_sliding_out_of_order_arrival(spark, tmpdir):
     ]
     stage_explicit_chunks(spark, chunks, schema, tmpdir)
     stream = replay_stream(spark, tmpdir, schema)
-    out = stateful.ordered_sliding_count_stream(
+    out = stateful.sliding_count_stream(
         stream, lookback_micros=2 * 60 * 1_000_000, disorder="5 minutes"
     )
     batches = runner.run_collect_batches(out, "append")
@@ -434,7 +435,7 @@ def test_reorder_shard_count_invariance(spark, tmpdir):
         try:
             stage_explicit_chunks(spark, asof_chunks, ASOF_SCHEMA, d)
             stream = replay_stream(spark, d, ASOF_SCHEMA)
-            out = stateful.ordered_asof_join_stream(
+            out = stateful.asof_join_stream(
                 stream, disorder="10 minutes", n_shards=n
             )
             batches = runner.run_collect_batches(out, "append")
@@ -457,7 +458,7 @@ def test_reorder_shard_count_invariance(spark, tmpdir):
                 d,
             )
             stream = replay_stream(spark, d, schema)
-            out = stateful.ordered_sliding_count_stream(
+            out = stateful.sliding_count_stream(
                 stream,
                 lookback_micros=2 * 60 * 1_000_000,
                 disorder="5 minutes",
@@ -674,9 +675,9 @@ def test_sharded_fraud_checkpoint_recovery(spark, tmpdir):
          [mk("a", 4, 900.0), mk("b", 5, 950.0)]],
         EVENTS_SCHEMA, data_dir,
     )
-    alerts = stateful.fraud_alert_stream_sharded(
+    alerts = stateful.fraud_alert_stream(
         replay_stream(spark, data_dir, EVENTS_SCHEMA), "key",
-        threshold=500.0, n_shards=2,
+        threshold=500.0, impl="sharded", n_shards=2,
     )
     # the memory sink can't recover a checkpoint — use the foreachBatch
     # runner (as the per-key recovery test does) and pin manually, as a
@@ -691,9 +692,9 @@ def test_sharded_fraud_checkpoint_recovery(spark, tmpdir):
         [[mk("a", 6, 100.0), mk("a", 7, 960.0), mk("b", 8, 970.0)]],
         EVENTS_SCHEMA, data_dir + "/chunk=99999-extra",
     )
-    alerts2 = stateful.fraud_alert_stream_sharded(
+    alerts2 = stateful.fraud_alert_stream(
         replay_stream(spark, data_dir, EVENTS_SCHEMA), "key",
-        threshold=500.0, n_shards=2,
+        threshold=500.0, impl="sharded", n_shards=2,
     )
     run2 = runner.run_collect_batches(alerts2, "append", checkpoint=ckpt)
     got = sorted(
@@ -776,9 +777,9 @@ def test_restart_refuses_unlabelled_shard_marker(spark, tmpdir):
     stage_explicit_chunks(
         spark, [[("a", 1, 600.0, base)]], EVENTS_SCHEMA, f"{tmpdir}/in"
     )
-    alerts = stateful.fraud_alert_stream_sharded(
+    alerts = stateful.fraud_alert_stream(
         replay_stream(spark, f"{tmpdir}/in", EVENTS_SCHEMA), "key",
-        threshold=500.0, n_shards=32,
+        threshold=500.0, impl="sharded", n_shards=32,
     )
     with pytest.raises(ValueError, match="shard labels None"):
         runner.run_to_memory(alerts, "old_marker", "append", checkpoint=ckpt)
@@ -1293,7 +1294,7 @@ def test_ordered_asof_checkpoint_recovery(spark, tmpdir):
         ASOF_SCHEMA,
         data_dir,
     )
-    enr = stateful.ordered_asof_join_stream(
+    enr = stateful.asof_join_stream(
         replay_stream(spark, data_dir, ASOF_SCHEMA), disorder="10 minutes"
     )
     run1 = [r for b in runner.run_collect_batches(enr, "append", checkpoint=ckpt) for r in b]
@@ -1308,7 +1309,7 @@ def test_ordered_asof_checkpoint_recovery(spark, tmpdir):
         ASOF_SCHEMA,
         data_dir + "/chunk=99999-extra",
     )
-    enr2 = stateful.ordered_asof_join_stream(
+    enr2 = stateful.asof_join_stream(
         replay_stream(spark, data_dir, ASOF_SCHEMA), disorder="10 minutes"
     )
     run2 = [r for b in runner.run_collect_batches(enr2, "append", checkpoint=ckpt) for r in b]
@@ -1339,7 +1340,7 @@ def test_ordered_sliding_checkpoint_recovery(spark, tmpdir):
         schema,
         data_dir,
     )
-    out = stateful.ordered_sliding_count_stream(
+    out = stateful.sliding_count_stream(
         replay_stream(spark, data_dir, schema), lookback, disorder="10 minutes"
     )
     run1 = [
@@ -1358,7 +1359,7 @@ def test_ordered_sliding_checkpoint_recovery(spark, tmpdir):
         schema,
         data_dir + "/chunk=99999-extra",
     )
-    out2 = stateful.ordered_sliding_count_stream(
+    out2 = stateful.sliding_count_stream(
         replay_stream(spark, data_dir, schema), lookback, disorder="10 minutes"
     )
     run2 = [
@@ -1780,11 +1781,11 @@ HOUR_MICROS = 60 * 60 * 1_000_000
 
 # every shard-keyed operator: (input schema, row i at time t, build)
 SHARD_KEYED_OPERATORS = {
-    "fraud_alert_stream_sharded": (
+    "fraud_alert_stream_impl_sharded": (
         EVENTS_SCHEMA,
         lambda i, t: (f"k{i}", 100 + i, 600.0, t),
-        lambda df, n: stateful.fraud_alert_stream_sharded(
-            df, "key", 500.0, n_shards=n
+        lambda df, n: stateful.fraud_alert_stream(
+            df, "key", 500.0, impl="sharded", n_shards=n
         ),
     ),
     "sliding_count_stream": (
@@ -1799,17 +1800,17 @@ SHARD_KEYED_OPERATORS = {
         lambda i, t: (100 + i, i, t, "purchase"),
         lambda df, n: stateful.asof_join_stream(df, n_shards=n),
     ),
-    "ordered_sliding_count_stream": (
+    "sliding_count_stream_disorder": (
         SLIDING_SCHEMA,
         lambda i, t: (i, 100 + i, t),
-        lambda df, n: stateful.ordered_sliding_count_stream(
+        lambda df, n: stateful.sliding_count_stream(
             df, HOUR_MICROS, disorder="1 hour", n_shards=n
         ),
     ),
-    "ordered_asof_join_stream": (
+    "asof_join_stream_disorder": (
         ASOF_SCHEMA,
         lambda i, t: (100 + i, i, t, "purchase"),
-        lambda df, n: stateful.ordered_asof_join_stream(
+        lambda df, n: stateful.asof_join_stream(
             df, disorder="1 hour", n_shards=n
         ),
     ),

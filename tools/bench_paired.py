@@ -45,6 +45,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_row
 from kafka_streams_learning_spark import get_spark
 from kafka_streams_learning_spark.catalog import all_queries
 from kafka_streams_learning_spark.gitinfo import (
@@ -153,14 +154,10 @@ def _stream_canary(spark, staging_dir: str) -> float:
 
 def _canary(spark, sf_dir, spec) -> float:
     """Warm median-of-3 wall seconds for the canary row."""
-    samples = []
-    for i in range(4):  # first run primes code/cache paths, untimed
-        t0 = time.time()
-        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        if i:
-            samples.append(time.time() - t0)
-        spark.catalog.clearCache()
-    return round(statistics.median(samples), 3)
+    time_row(spark, sf_dir, spec)  # primes code/cache paths, untimed
+    return round(
+        statistics.median(time_row(spark, sf_dir, spec) for _ in range(3)), 3
+    )
 
 
 def host_is_clean(canaries: list[float], canaries_stream: list[float]) -> bool:
@@ -229,16 +226,6 @@ def warm_band_at(warm: dict, sf: float) -> tuple[dict[str, list], str | None]:
     return warm["queries"], None
 
 
-def _full_pass(spark, sf_dir, specs) -> dict[str, float]:
-    timings: dict[str, float] = {}
-    for spec in specs:
-        t0 = time.time()
-        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[spec.name] = round(time.time() - t0, 3)
-        spark.catalog.clearCache()
-    return timings
-
-
 def main() -> int:
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -268,10 +255,10 @@ def main() -> int:
 
     c0 = _canary(spark, sf_dir, canary_spec)
     s0 = _stream_canary(spark, canary_stage)
-    run_a = _full_pass(spark, sf_dir, specs)
+    run_a = {s.name: time_row(spark, sf_dir, s) for s in specs}
     c1 = _canary(spark, sf_dir, canary_spec)
     s1 = _stream_canary(spark, canary_stage)
-    run_b = _full_pass(spark, sf_dir, specs)
+    run_b = {s.name: time_row(spark, sf_dir, s) for s in specs}
     c2 = _canary(spark, sf_dir, canary_spec)
     s2 = _stream_canary(spark, canary_stage)
 

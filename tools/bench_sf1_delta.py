@@ -13,6 +13,11 @@ exists for at sf0.1 — so a ratio is only flagged (`suspect`) past a
 generous 1.5× band, and a flag means "re-run and investigate", not
 "regression confirmed".
 
+Rows are timed with `bench.time_row`, as BENCH_SF1.json's were. Records
+before the `"timing": "noop"` field timed `.count()`, which prunes pure
+projections, so their ratios against the noop-write reference are not
+comparable (x50 read 0.213).
+
 Usage: python tools/bench_sf1_delta.py <row> [row ...]
 """
 
@@ -44,6 +49,7 @@ def main() -> int:
     if unknown:
         raise SystemExit(f"rows missing from BENCH_SF1.json: {unknown}")
 
+    from bench import time_row
     from kafka_streams_learning_spark import get_spark
     from kafka_streams_learning_spark.catalog import all_queries
     from kafka_streams_learning_spark.gitinfo import code_fingerprint, git_head
@@ -52,12 +58,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     specs = {s.name: s for s in all_queries()}
 
-    def _clean():
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-        spark.catalog.clearCache()
-
     deltas = {}
     for name in rows:
         # BENCH_SF1.json rows are STEADY-STATE (bench.py attributes shared
@@ -65,28 +65,21 @@ def main() -> int:
         # call here pays its staging inside the timing, which false-flagged
         # s04/s23 as suspect on this tool's first run. Time the SECOND
         # call; record the first as cold_s for forensics.
-        t0 = time.time()
-        specs[name].spark(spark, SF1_DIR).count()
-        cold = round(time.time() - t0, 3)
-        _clean()
-        t0 = time.time()
-        n = specs[name].spark(spark, SF1_DIR).count()
-        took = round(time.time() - t0, 3)
+        cold = time_row(spark, SF1_DIR, specs[name])
+        took = time_row(spark, SF1_DIR, specs[name])
         ratio = round(took / max(ref[name], 1e-9), 3)
         deltas[name] = {
             "sf1_s": took,
             "cold_s": cold,
             "ref_s": ref[name],
             "ratio": ratio,
-            "rows": n,
             "verdict": "suspect" if ratio > BAND else "ok",
         }
-        _clean()
 
     path = os.path.join(here, "BENCH_SF1_DELTA.json")
     record = {"generated_unix": int(time.time()), "git_head": git_head(here),
               "code_fingerprint": code_fingerprint(here), "band": BAND,
-              "deltas": deltas}
+              "timing": "noop", "deltas": deltas}
     existing = []
     if os.path.exists(path):
         with open(path) as f:

@@ -10,9 +10,9 @@ warm column instead of prose archaeology — especially after round 8's
 LRU gate rotation, which reorders the catalog every round and therefore
 moves first-touch costs between rows.
 
-Same measurement discipline as bench.py: noop batch sink (executors do
-the work, nothing collects), cache cleared between queries so one row's
-cache pressure cannot tax the next, JVM warmed before either pass. The
+Same measurement as bench.py, `bench.time_row` per row (noop batch sink,
+cache cleared and memory sinks dropped between rows), JVM warmed before
+either pass. The
 shared set-up (`catalog.warm_setup`) is deliberately NOT built first: the
 cold pass is where its first-touch costs land.
 """
@@ -23,10 +23,10 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_row
 from kafka_streams_learning_spark import get_spark
 from kafka_streams_learning_spark.catalog import all_queries
 
@@ -47,11 +47,9 @@ def main() -> None:
     timings: dict[str, list[float]] = {}
     for label in ("cold", "warm"):
         for spec in all_queries():
-            t0 = time.time()
-            df = spec.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings.setdefault(spec.name, []).append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+            timings.setdefault(spec.name, []).append(
+                time_row(spark, sf_dir, spec)
+            )
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     record = {

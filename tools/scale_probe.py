@@ -17,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,6 +46,7 @@ SF_DIRS = [
 
 def main() -> int:
     rows = sys.argv[1:] or DEFAULT_ROWS
+    from bench import time_row
     from kafka_streams_learning_spark import get_spark
     from kafka_streams_learning_spark.catalog import all_queries
 
@@ -72,12 +72,8 @@ def main() -> int:
             print(f"# {sf_name} set-up warmed: {detail}", flush=True)
         timings: dict[str, float] = {}
         for name in rows:
-            t0 = time.time()
-            df = specs[name].spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.time() - t0, 2)
+            timings[name] = round(time_row(spark, sf_dir, specs[name]), 2)
             print(f"# {sf_name} {name} {timings[name]}s", flush=True)
-            spark.catalog.clearCache()
         out[sf_name] = timings
 
     first, last = SF_DIRS[0][0], SF_DIRS[-1][0]

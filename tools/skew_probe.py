@@ -13,8 +13,9 @@ user carrying ~50% of all events):
    the constant, not the growth class, because the per-shard release
    math is one vectorized pass regardless of how rows distribute over
    users inside the shard.
-3. **Forced split-path parity, end-to-end** — runs the ordered sliding
-   count and as-of operators over a replayed skew sample twice: default
+3. **Forced split-path parity, end-to-end** — runs the reorder-buffered
+   (`disorder=`) sliding count and as-of join over a replayed skew
+   sample twice: default
    `_max_composite` (no split) vs one small enough that every
    multi-user shard batch recurses into the exact user-split fallback.
    Emitted rows must be identical. This drives the split path through
@@ -115,8 +116,9 @@ def time_rows(spark) -> dict:
 
 
 def check_split_parity(spark) -> dict:
-    """Run ordered sliding + as-of over a replayed skew1 SAMPLE with the
-    split forced vs not; emitted rows must match exactly."""
+    """Run the reorder-buffered sliding count + as-of join over a
+    replayed skew1 SAMPLE with the split forced vs not; emitted rows
+    must match exactly."""
     from pyspark.sql import functions as F
 
     from kafka_streams_learning_spark.sources.batch import load_table
@@ -143,16 +145,16 @@ def check_split_parity(spark) -> dict:
     results = {}
     for op_name, build in (
         (
-            "ordered_sliding",
-            lambda df, mc: stateful.ordered_sliding_count_stream(
+            "sliding_disorder",
+            lambda df, mc: stateful.sliding_count_stream(
                 df.select("user_id", "event_id", "ts"),
                 24 * 3600 * 1_000_000, disorder="13 hours",
                 _max_composite=mc,
             ),
         ),
         (
-            "ordered_asof",
-            lambda df, mc: stateful.ordered_asof_join_stream(
+            "asof_disorder",
+            lambda df, mc: stateful.asof_join_stream(
                 df.select("event_id", "user_id", "ts", "event_type"),
                 disorder="13 hours", _max_composite=mc,
             ),
